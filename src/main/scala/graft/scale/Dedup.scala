@@ -471,74 +471,27 @@ object Dedup {
     * rounds (near-dup clusters are near-cliques — diameter is small; the
     * `maxIter` cap guards pathological chains). Output: (id, component)
     * for every id that appears in a pair; component = min id reachable.
-    * Deterministic. */
+    * Deterministic.
+    *
+    * Every round is truncated through [[Lineage.scoped]]: by default
+    * `localCheckpoint`; with `checkpointDir` (HDFS/object store, for a
+    * cluster where an executor loss would kill the truncated lineage
+    * mid-loop) a reliable checkpoint. The caller owns `checkpointDir`;
+    * superseded rounds are deleted as the loop advances and only the
+    * newest round's subdirectory — which backs the returned frame — is
+    * left under it. */
   def components(pairs: DataFrame, aCol: String, bCol: String,
-                 maxIter: Int = 50, checkpointDir: Option[String] = None,
-                 driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame =
-    componentsStats(pairs, aCol, bCol, maxIter, checkpointDir,
-      driverEdgeLimit)._1
-
-  /** Edge-count ceiling for [[componentsStats]]' driver union-find fast
-    * path: 4M undirected edges ≈ 64 MB of (long, long) pairs on the
-    * driver — the same order as a broadcast-join build side. Above it
-    * the distributed doubling-round fixpoint runs. */
-  val DefaultDriverEdgeLimit: Long = 4L * 1000 * 1000
+                 maxIter: Int = 50, checkpointDir: Option[String] = None): DataFrame =
+    componentsStats(pairs, aCol, bCol, maxIter, checkpointDir)._1
 
   /** [[components]] plus the number of doubling rounds the fixpoint loop
     * actually ran — the scale-soak observable: at 10× data the near-dup
     * graph's diameter (and so the round count) should hold roughly
-    * constant, which is what makes the O(log D) claim measurable. */
+    * constant, which is what makes the O(log D) claim measurable.
+    * Checkpoint ownership as in [[components]]. */
   def componentsStats(pairs: DataFrame, aCol: String, bCol: String,
                       maxIter: Int = 50,
-                      checkpointDir: Option[String] = None,
-                      driverEdgeLimit: Long = DefaultDriverEdgeLimit): (DataFrame, Int) = {
-    // plan-truncation strategy: `localCheckpoint` (executor-memory blocks)
-    // is fine single-node, but an executor loss on a cluster kills the
-    // truncated lineage mid-loop — pass `checkpointDir` (HDFS/object
-    // store) there and each round is durably materialized instead.
-    // Superseded checkpoints are DELETED as the loop advances (each
-    // setCheckpointDir call lands the next checkpoint in a fresh UUID
-    // subdir, and an eagerly-written checkpoint is a self-contained leaf,
-    // so once checkpoint k is durable nothing re-reads k−1): without
-    // cleanup a long fixpoint run accumulates ~3 full label-table copies
-    // per round in object storage. Only the NEWEST dir is retained — it
-    // backs the returned DataFrame for its lifetime.
-    //
-    // setCheckpointDir is GLOBAL SparkContext state, so this call scopes
-    // itself: all checkpoints land under a per-call subdirectory of the
-    // supplied dir (cleanup never touches anything outside it), and the
-    // caller's previously-configured checkpoint dir is restored on exit.
-    // A truly concurrent checkpointing job in the same SparkContext can
-    // still interleave with the loop's setCheckpointDir calls — that race
-    // is inherent to the global setting; run components in its own
-    // session/context if another job checkpoints concurrently.
-    val perCallBase = checkpointDir.map(d =>
-      s"$d/graft-cc-${java.util.UUID.randomUUID()}")
-    val priorCkptDir = pairs.sparkSession.sparkContext.getCheckpointDir
-    val ckptDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-    def truncate(df: DataFrame): DataFrame = perCallBase match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        sc.setCheckpointDir(dir)
-        val out = df.checkpoint(eager = true) // durable before any delete
-        sc.getCheckpointDir.foreach(ckptDirs += _)
-        if (ckptDirs.size > 1) {
-          val fs = new org.apache.hadoop.fs.Path(dir)
-            .getFileSystem(sc.hadoopConfiguration)
-          ckptDirs.dropRight(1).foreach(s =>
-            scala.util.Try(fs.delete(new org.apache.hadoop.fs.Path(s), true)))
-          val last = ckptDirs.last
-          ckptDirs.clear(); ckptDirs += last
-        }
-        out
-      case None => df.localCheckpoint(true)
-    }
-    // restore the caller's checkpoint dir (getCheckpointDir returns the
-    // UUID-resolved path, so the restored future checkpoints nest one
-    // level deeper — harmless, and the caller's cleanup scope is intact)
-    def restoreCkptDir(): Unit =
-      if (perCallBase.isDefined) priorCkptDir.foreach(
-        pairs.sparkSession.sparkContext.setCheckpointDir)
+                      checkpointDir: Option[String] = None): (DataFrame, Int) = {
     // the pair list may be an expensive subplan (sm14/pipe4 feed a full
     // near-dup join in here). Symmetrization is a MAP-SIDE explode of
     // each pair into both directions — ONE execution of the pair
@@ -553,118 +506,73 @@ object Dedup {
         struct(col("b").as("s"), col("a").as("t")))).as("st"))
       .select(col("st.s").as("s"), col("st.t").as("t"))
       .distinct().cache()
-    val nDirected = edges.count()
     // empty pair list => empty component map (the sum-based fixpoint
     // check below would otherwise read a null aggregate)
-    if (nDirected == 0L) {
+    if (edges.count() == 0L) {
       edges.unpersist()
       return (pairs.sparkSession.emptyDataFrame
         .select(lit(0L).as("id"), lit(0L).as("component")).limit(0), 0)
     }
-    // SIZE-KEYED LABEL STEP (the broadcast-join discipline applied to the
-    // fixpoint): a near-dup pair list is near-dup-sized, not corpus-sized
-    // — at bench SFs it is a few thousand edges, and running 3 Spark jobs
-    // per doubling round (2 checkpoints + the fixpoint probe) to label a
-    // toy graph is pure scheduler overhead. Below `driverEdgeLimit`
-    // UNDIRECTED edges (default 4M ≈ 64 MB of id pairs — the same
-    // envelope a broadcast-join build side lives in), the cached edge
-    // list is collected once and labeled with a driver union-find; the
-    // result (min reachable id per node — EXACTLY the fixpoint's output)
-    // returns as a local DataFrame. Above the limit the doubling-round
-    // fixpoint below runs unchanged — the 100-TB path. Parity of the two
-    // paths is spec-pinned (DedupSpec components driver/distributed).
-    if (nDirected <= 2L * driverEdgeLimit) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val nxt = parent.get(c); parent.put(c, r); c = nxt }
-        r
+    val (labels, it, converged) =
+      Lineage.scoped(pairs.sparkSession, checkpointDir) { truncate =>
+        // label(v) starts at min(v, min neighbor).
+        // Each round's result is plan-truncated: `next` references
+        // `labels` TWICE (union + join), so without truncation the
+        // logical plan doubles per round — exponential analyzer/explain
+        // cost long before any execution problem. Checkpointing makes
+        // every round's plan a fresh leaf.
+        def sumOf(df: DataFrame): java.math.BigDecimal =
+          df.agg(sum(col("label")).cast("decimal(38,0)")).head().getDecimal(0)
+        var labels = truncate(edges.groupBy(col("s")).agg(min(col("t")).as("mn"))
+          .select(col("s"), least(col("s"), col("mn")).as("label")))
+        var labelSum = sumOf(labels)
+        // one round = hop step (label(v) <- min over neighbors' labels) then
+        // pointer-jump step (label(v) <- min(label(v), label(label(v)))):
+        // min-labels chase their component's root at doubling speed, so a
+        // diameter-D chain converges in O(log D) rounds rather than the O(D)
+        // of plain propagation (the failure mode on the long similarity
+        // chains templated web text produces)
+        def round(cur: DataFrame): DataFrame = {
+          val viaNeighbor = edges.as("e")
+            .join(cur.as("l"), col("e.t") === col("l.s"))
+            .select(col("e.s").as("s"), col("l.label").as("label"))
+          // checkpointed before the self-join: the jump references `hopped`
+          // twice (probe side + lookup side), and without truncation the hop
+          // aggregation would be planned and executed twice per round
+          val hopped = truncate(cur.unionByName(viaNeighbor)
+            .groupBy(col("s")).agg(min(col("label")).as("label")))
+          // fresh projection (new attribute ids) for the lookup side of the
+          // self-join — aliasing alone trips ambiguous-attribute resolution
+          val lookup = hopped.select(col("s").as("ls"), col("label").as("llabel"))
+          truncate(hopped
+            .join(lookup, col("label") === col("ls"), "left")
+            .select(col("s"),
+                    least(col("label"), coalesce(col("llabel"), col("label"))).as("label")))
+        }
+        var it = 0
+        var converged = false
+        while (it < maxIter && !converged) {
+          val next = round(labels)
+          val nextSum = sumOf(next)
+          labels.unpersist()
+          labels = next
+          converged = nextSum.compareTo(labelSum) == 0 // labels shrink monotonically
+          labelSum = nextSum
+          it += 1
+        }
+        if (!converged) {
+          // the loop may have REACHED the fixpoint on its final round without
+          // a confirming round to observe it — probe once more before
+          // declaring failure (labels only decrease, so an unchanged sum is a
+          // true fixpoint)
+          val probe = round(labels)
+          converged = sumOf(probe).compareTo(labelSum) == 0
+          labels.unpersist()
+          labels = probe
+        }
+        (labels, it, converged)
       }
-      val edgeIt = edges.toLocalIterator()
-      while (edgeIt.hasNext) {
-        val row = edgeIt.next()
-        val s = row.getLong(0); val t = row.getLong(1)
-        if (!parent.containsKey(s)) parent.put(s, s)
-        if (!parent.containsKey(t)) parent.put(t, t)
-        val rs = find(s); val rt = find(t)
-        // union by MIN id: the root is always the smallest id seen, so
-        // find() lands every node on its component minimum directly
-        if (rs < rt) parent.put(rt, rs) else if (rt < rs) parent.put(rs, rt)
-      }
-      val outRows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-      val keys = parent.keySet().toArray(new Array[java.lang.Long](0))
-      java.util.Arrays.sort(keys.asInstanceOf[Array[Object]])
-      keys.foreach(k => outRows += ((k.longValue(), find(k.longValue()))))
-      edges.unpersist()
-      restoreCkptDir()
-      val spark = pairs.sparkSession
-      return (spark.createDataset(outRows.toSeq)(
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong))
-        .toDF("id", "component"), 0)
-    }
-    // label(v) starts at min(v, min neighbor).
-    // Each round's result is plan-truncated (see `truncate` above):
-    // `next` references `labels` TWICE (union + join), so without
-    // truncation the logical plan doubles per round — exponential
-    // analyzer/explain cost long before any execution problem.
-    // Checkpointing makes every round's plan a fresh leaf.
-    var labels = truncate(edges.groupBy(col("s")).agg(min(col("t")).as("mn"))
-      .select(col("s"), least(col("s"), col("mn")).as("label")))
-    var labelSum = labels.agg(sum(col("label")).cast("decimal(38,0)")).head().getDecimal(0)
-    // one round = hop step (label(v) <- min over neighbors' labels) then
-    // pointer-jump step (label(v) <- min(label(v), label(label(v)))):
-    // min-labels chase their component's root at doubling speed, so a
-    // diameter-D chain converges in O(log D) rounds rather than the O(D)
-    // of plain propagation (the failure mode on the long similarity
-    // chains templated web text produces)
-    def round(cur: DataFrame): DataFrame = {
-      val viaNeighbor = edges.as("e")
-        .join(cur.as("l"), col("e.t") === col("l.s"))
-        .select(col("e.s").as("s"), col("l.label").as("label"))
-      // checkpointed before the self-join: the jump references `hopped`
-      // twice (probe side + lookup side), and without truncation the hop
-      // aggregation would be planned and executed twice per round
-      val hopped = truncate(cur.unionByName(viaNeighbor)
-        .groupBy(col("s")).agg(min(col("label")).as("label")))
-      // fresh projection (new attribute ids) for the lookup side of the
-      // self-join — aliasing alone trips ambiguous-attribute resolution
-      val lookup = hopped.select(col("s").as("ls"), col("label").as("llabel"))
-      truncate(hopped
-        .join(lookup, col("label") === col("ls"), "left")
-        .select(col("s"),
-                least(col("label"), coalesce(col("llabel"), col("label"))).as("label")))
-    }
-    def sumOf(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label")).cast("decimal(38,0)")).head().getDecimal(0)
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      val next = round(labels)
-      val nextSum = sumOf(next)
-      labels.unpersist()
-      labels = next
-      converged = nextSum.compareTo(labelSum) == 0 // labels shrink monotonically
-      labelSum = nextSum
-      it += 1
-    }
-    if (!converged) {
-      // the loop may have REACHED the fixpoint on its final round without
-      // a confirming round to observe it — probe once more before
-      // declaring failure (labels only decrease, so an unchanged sum is a
-      // true fixpoint)
-      val probe = round(labels)
-      val probeSum = sumOf(probe)
-      converged = probeSum.compareTo(labelSum) == 0
-      labels.unpersist()
-      labels = probe
-      labelSum = probeSum
-    }
     edges.unpersist()
-    restoreCkptDir()
     // with pointer jumping, non-convergence in maxIter rounds means a
     // component of diameter ~2^maxIter — at the default that is not a
     // real graph, it's a bug or adversarial input. Returning the partial
@@ -797,11 +705,12 @@ object Dedup {
       }
       // 24 B/row sketch table, consumed by BOTH lookup sides of the
       // screen join — materialized so the 128·d-multiply skU UDF (and
-      // the corpus scan under it) runs once, not per side
-      val sk = base.withColumn("sk", skU(col("v")))
+      // the corpus scan under it) runs once, not per side (measured: the
+      // d11 fixture with the cascade forced, sf0.1, 4 cores, 4.28 s vs
+      // 6.35 s min-of-3 without it)
+      val sk = Lineage.truncate(base.withColumn("sk", skU(col("v")))
         .select(col("vid"), col("sk").getItem(0).as("sk0"),
-                col("sk").getItem(1).as("sk1"))
-        .localCheckpoint(true)
+                col("sk").getItem(1).as("sk1")), checkpointDir = None)
       val maxH = math.min(128,
         math.ceil(128.0 * math.acos(math.max(-1.0, math.min(1.0, threshold)))
           / math.Pi + 20.0).toInt)
@@ -929,17 +838,13 @@ object Dedup {
     // the join needs anyway.
     val wbb = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket"))
-    // the capped signature table is consumed TWICE (probe side + bucket
-    // side of the candidate self-join) and expression-id drift defeats
-    // ReuseExchange here — without materialization the sigU UDF
-    // (bands·ppb·d multiplies per vector) and the occupancy window run
-    // once per side. 24 B/row × bands·n: materialize once (the r15
-    // carry item — "one signature computation in the plan").
+    // the capped table feeds both sides of the candidate self-join, but
+    // an eager materialization of it measured no win beyond run-to-run
+    // noise on d11 (isolated A/B, sf0.1, 4 cores), so it stays lazy
     val capped = banded
       .withColumn("occ", count(lit(1)).over(wbb))
       .filter(col("occ") <= maxBucket.toLong)
       .drop("occ")
-      .localCheckpoint(true)
     val probe = capped.repartition(col("vid"))
     val cand = probe.as("l").join(capped.as("r"),
         col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&

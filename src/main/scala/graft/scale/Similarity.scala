@@ -591,6 +591,10 @@ object Similarity {
     }
     val cov = breeze.linalg.DenseMatrix.zeros[Double](d, d)
     momRows.foreach { r =>
+      if (r.isNullAt(2)) throw new IllegalArgumentException(
+        s"pcaWhiten: covariance (${r.getInt(0)},${r.getInt(1)}) is outside " +
+        "covarianceMoments' exactness envelope (n·max|x_i·x_j|·1e12 must " +
+        "stay under ~9e18); pre-scale the vectors or shard the input")
       val (i, j, c) = (r.getInt(0) - 1, r.getInt(1) - 1, r.getDouble(2))
       cov(i, j) = c; cov(j, i) = c
     }

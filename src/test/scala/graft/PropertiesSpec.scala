@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.scale.{Dedup, TextAnalysis}
+import org.apache.spark.sql.graftbridge.ContextBridge
 
 /** Property-style invariants over deterministic pseudo-random inputs
   * (fixed-seed LCG generators — reproducible like any fixture, broad
@@ -27,38 +28,22 @@ class PropertiesSpec extends SparkTestBase {
       edges.foreach { case (a, b) => union(a.toInt, b.toInt) }
       val touched = edges.flatMap(e => Seq(e._1, e._2)).toSet
       val expect = touched.map(v => v -> find(v.toInt).toLong).toMap
-      val got = Dedup.components(edges.toDF("id_a", "id_b"), "id_a", "id_b")
-        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-      // same partition into components; the distributed labels are the
-      // component MINIMA, which union-find-with-min-normalization also
-      // produces up to path compression — compare the induced partitions
-      def partition(m: Map[Long, Long]) = m.groupBy(_._2).values.map(_.keySet).toSet
-      assert(partition(got) == partition(expect), s"seed=$seed: $got vs $expect")
-      // and every emitted label IS its component's minimum member
-      got.groupBy(_._2).foreach { case (label, members) =>
-        assert(label == members.keys.min, s"seed=$seed label $label not the min")
-      }
-    }
-  }
-
-  test("components driver fast path == distributed fixpoint (parity, 2 seeds)") {
-    // the size-keyed label step (r16): below the edge limit a driver
-    // union-find answers; above (forced here with limit 0) the doubling
-    // -round fixpoint runs — both must emit the identical label table
-    for (seed <- Seq(7L, 123L)) {
-      val r = lcg(seed)
-      val n = 60
-      val edges = (0 until 90).map(_ => ((r() % n).toInt.toLong, (r() % n).toInt.toLong))
-        .filter { case (a, b) => a != b }
-      val df = edges.toDF("id_a", "id_b")
-      val (viaDriver, rounds0) = Dedup.componentsStats(df, "id_a", "id_b")
-      val (viaDist, roundsN) =
-        Dedup.componentsStats(df, "id_a", "id_b", driverEdgeLimit = 0L)
-      assert(rounds0 == 0, "small graph must take the driver path")
-      assert(roundsN >= 1, "limit 0 must force the distributed fixpoint")
-      val a = viaDriver.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-      val b = viaDist.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-      assert(a == b, s"seed=$seed: driver $a vs distributed $b")
+      val dir = java.nio.file.Files.createTempDirectory("graft-cc-prop").toString
+      try for (ckpt <- Seq(None, Some(dir))) {
+        val (labels, rounds) =
+          Dedup.componentsStats(edges.toDF("id_a", "id_b"), "id_a", "id_b", checkpointDir = ckpt)
+        assert(rounds >= 1, s"seed=$seed ckpt=$ckpt: no fixpoint round reported")
+        val got = labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+        // same partition into components; the distributed labels are the
+        // component MINIMA, which union-find-with-min-normalization also
+        // produces up to path compression — compare the induced partitions
+        def partition(m: Map[Long, Long]) = m.groupBy(_._2).values.map(_.keySet).toSet
+        assert(partition(got) == partition(expect), s"seed=$seed ckpt=$ckpt: $got vs $expect")
+        // and every emitted label IS its component's minimum member
+        got.groupBy(_._2).foreach { case (label, members) =>
+          assert(label == members.keys.min, s"seed=$seed ckpt=$ckpt label $label not the min")
+        }
+      } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
     }
   }
 
@@ -79,6 +64,26 @@ class PropertiesSpec extends SparkTestBase {
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
+    }
+  }
+
+  test("Lineage reliable checkpoint restores the context's checkpoint dir, unset included") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-restore").toString
+    val other = java.nio.file.Files.createTempDirectory("graft-ckpt-other").toString
+    val df = (1 to 20).map(i => (i.toLong, i * 2L)).toDF("a", "b")
+    try {
+      ContextBridge.restoreCheckpointDir(sc, None)
+      assert(graft.scale.Lineage.truncate(df, Some(dir)).count() == 20)
+      assert(sc.getCheckpointDir.isEmpty, s"unset dir leaked: ${sc.getCheckpointDir}")
+      sc.setCheckpointDir(other)
+      val before = sc.getCheckpointDir
+      Dedup.components(df, "a", "b", checkpointDir = Some(dir)).count()
+      assert(sc.getCheckpointDir == before, s"${sc.getCheckpointDir} != $before")
+    } finally {
+      ContextBridge.restoreCheckpointDir(sc, None)
+      Seq(dir, other).foreach(d =>
+        new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively())
     }
   }
 

@@ -511,8 +511,8 @@ class ScaleSpec extends SparkTestBase {
     val baseList = new scala.collection.mutable.ArrayBuffer[java.nio.file.Path]
     bases.forEachRemaining(p => baseList += p)
     assert(baseList.size == 1 &&
-      baseList.head.getFileName.toString.startsWith("graft-cc-"),
-      s"expected one per-call graft-cc subdir, got $baseList")
+      baseList.head.getFileName.toString.startsWith("graft-ckpt-"),
+      s"expected one per-call graft-ckpt subdir, got $baseList")
     // ... and superseded rounds were cleaned up: only the NEWEST uuid
     // subdir (backing the returned labels) survives the loop
     val uuidDirs = java.nio.file.Files.list(baseList.head).count()
@@ -784,6 +784,19 @@ class ScaleSpec extends SparkTestBase {
     assert(rvar.sliding(2).forall { case Array(x, y) => x >= y - 1e-9 },
       s"variances not descending: ${rvar.toSeq}")
     assert(rvar.head > rvar.last, "top component must explain more variance than the last")
+  }
+
+  test("pcaWhiten: a covariance outside the exactness envelope is a named error") {
+    // |x| ≈ 2000 puts q6 products at ~4e18: below the ~3034 point where a
+    // single product wraps, and the sums stay exact, but with 3 rows
+    // n·max|p| crosses the envelope, so covarianceMoments emits NULL
+    val vecs = Seq((1L, Array(2000.0, -1999.5)), (2L, Array(1.0, 2.0)),
+      (3L, Array(-0.5, 1.5))).toDF("vec_id", "embedding")
+    assert(Similarity.covarianceMoments(vecs, "embedding").filter(col("cov").isNull).count() > 0)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.pcaWhiten(vecs, "embedding", "vec_id", 1)
+    }
+    assert(e.getMessage.contains("exactness envelope"), e.getMessage)
   }
 
   test("qualityTiers: thirds split, tiered keep rates, approx cuts agree with exact") {
