@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries at
   * SPARK_GRAFT_SF_DIR on local[N], prints ONE JSON line.
   *
@@ -14,42 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE exchange sizing is env-tunable: SPARK_GRAFT_INIT_PARTS lifts
-      // initialPartitionNum so AQE starts wide and coalesces by runtime
-      // stats — the right shape when total cores >> this session's (a
-      // real cluster, or the sf1 soak probing scaling headroom). The
-      // DEFAULT stays at the session partition count because the lift is
-      // pure overhead at bench scale — measured at sf0.1: 32→44.8s,
-      // 64→51.4s, 256→54.9s total (map-side shuffle-block count grows
-      // with the initial partition number while every post-coalesce plan
-      // is identical).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-              sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Join strategy (guide §3.1/§9): let the planner use shuffled-hash
-      // joins where a build side fits per partition instead of always
-      // sorting both sides, and let AQE rewrite SMJ→SHJ at runtime when
-      // every post-shuffle partition is under the threshold. Measured on
-      // the 30-heaviest-query probe set at sf0.1: 62.3 s → 57.7 s
-      // (−7.5%), no regressions beyond noise, results identical (join
-      // strategy never changes semantics). Scale-safe by construction:
-      // the AQE rewrite checks ACTUAL per-partition sizes, and 64 MB of
-      // per-partition build map is far inside executor memory at any
-      // cluster size; both knobs stay env-overridable for A/B runs.
-      .config("spark.sql.join.preferSortMergeJoin",
-              sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-              sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
 
     // warmup: touch every table once (footer cache, codegen bootstrap)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -63,13 +26,7 @@ object Bench {
     // closed-form siblings m1_ar1/m2_sar1/m4_var1/m5_* stay in)
     val estimators = graft.queries.ModelQueries.queries.keySet +
       "f3_series_arima" + "m3_decision" + "m9_decision"
-    // optional probe filter (soak tooling): SPARK_GRAFT_ONLY=q1,q2 times
-    // just those queries in one JVM — per-op scaling ratios without 2N
-    // JVM launches
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val headline = SparkEntry.queries
-      .filterNot { case (k, _) => estimators(k) }
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+    val headline = SparkEntry.queries.filterNot { case (k, _) => estimators(k) }
 
     // warmup 2: run every headline query once at the TARGET SF so
     // whole-stage-codegen compilation, AQE runtime re-planning, and JVM
@@ -112,16 +69,7 @@ object Bench {
       spark.sharedState.cacheManager.clearCache()
       name -> (if (ok) dt else -1.0)
     }.toMap
-    // soak tooling: SPARK_GRAFT_PASSES trims the measured passes for
-    // per-op scaling probes where min-of-3 isolated runs are the pinned
-    // number anyway (default 3 = the artifact bench)
-    val nPasses = try sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-      catch { case _: NumberFormatException =>
-        sys.error(s"SPARK_GRAFT_PASSES must be an integer, got " +
-          s"'${sys.env("SPARK_GRAFT_PASSES")}'") }
-    // 0/negative would "succeed" with every query reported failed (-1)
-    // and total=0 — a plausible-looking but meaningless artifact
-    require(nPasses >= 1, s"SPARK_GRAFT_PASSES must be >= 1, got $nPasses")
+    val nPasses = 3
     val passes = (0 until nPasses).map { i =>
       val shift = i * names.length / nPasses
       pass(names.drop(shift) ++ names.take(shift))

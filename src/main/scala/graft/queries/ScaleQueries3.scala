@@ -110,19 +110,24 @@ object ScaleQueries3 {
     * precision and a recall floor are spec-pinned against d5's
     * brute-force twin; low-threshold mining routes to d12/SemDeDup). */
   private def d11CosineLsh: Q = (s, d) => {
+    val (fixture, n) = d11Fixture(s, d)
+    graft.scale.Dedup.cosineNearDupLsh(fixture, "embedding", "vec_id", 0.9,
+        knownRows = n)
+      .select(col("id_a"), col("id_b"), Det.dround(col("cosine"), 6).as("cosine"))
+  }
+
+  /** D11's input: the embeddings table (`vec_id`, `embedding` as
+    * array<double>) unioned with its ±30% twins (`vec_id` + 2^40), plus
+    * its row count. The count is exactly 2× the base table's, and a raw
+    * parquet count() is metadata-cheap, so the union+transform lineage is
+    * never computed twice (ADVICE r10). */
+  def d11Fixture(s: SparkSession, d: String): (DataFrame, Long) = {
     val em = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val offset = 1L << 40
-    val twins = em.select((col("vec_id") + offset).as("vec_id"),
+    val twins = em.select((col("vec_id") + (1L << 40)).as("vec_id"),
       expr("transform(embedding, (x, j) -> x * CASE WHEN j % 2 = 0 THEN 1.3 ELSE 0.7 END)")
         .as("embedding"))
-    // knownRows: the union is exactly 2× the base table, and a raw
-    // parquet count() is metadata-cheap — the union+transform lineage is
-    // never computed twice (ADVICE r10)
-    graft.scale.Dedup.cosineNearDupLsh(em.unionByName(twins),
-        "embedding", "vec_id", 0.9,
-        knownRows = 2L * Tables.embeddings(s, d).count())
-      .select(col("id_a"), col("id_b"), Det.dround(col("cosine"), 6).as("cosine"))
+    (em.unionByName(twins), 2L * Tables.embeddings(s, d).count())
   }
 
   /** D12 — SemDeDup: k-means cluster-then-prune semantic dedup over the

@@ -782,8 +782,7 @@ object Dedup {
     // plan stays a lazy builder in that form.
     val n = math.max(1L,
       if (knownRows > 0) knownRows else df.select(col(idCol)).count())
-    val ppb = math.max(planesPerBand,
-      math.ceil(math.log(n.toDouble / math.max(1, targetBucket)) / math.log(2)).toInt)
+    val ppb = lshPlanesPerBand(n, planesPerBand, targetBucket)
     val planes = Similarity.hyperplanes(bands * ppb, d0)
     val bc = df.sparkSession.sparkContext.broadcast(planes)
     val nb = bands
@@ -809,6 +808,13 @@ object Dedup {
       .select(col("vid"), posexplode(col("sig"))).toDF("vid", "band", "bucket")
     (banded, base, d0, n)
   }
+
+  /** The adaptive bucket resolution of [[cosineLshCandidates]] at `n`
+    * rows: log2(n/targetBucket) planes per band, at least
+    * `planesPerBand`. */
+  def lshPlanesPerBand(n: Long, planesPerBand: Int = 4, targetBucket: Int = 32): Int =
+    math.max(planesPerBand,
+      math.ceil(math.log(n.toDouble / math.max(1, targetBucket)) / math.log(2)).toInt)
 
   private def lshStages(df: DataFrame, vecCol: String, idCol: String,
                         bands: Int, planesPerBand: Int, dim: Int,

@@ -1,8 +1,13 @@
 #!/bin/bash
 # Plain-java bench runner (no sbt decoration): the compact summary JSON is
 # the literal last stdout line, so the driver's tail-parse always succeeds.
-# Usage: [SPARK_GRAFT_SF_DIR=...] [SPARK_GRAFT_CPUS=N] [SPARK_GRAFT_ONLY=q1,q2]
-#        [SPARK_GRAFT_PASSES=N] tools/bench.sh [main-class, default graft.Bench]
+# Usage: [SPARK_GRAFT_SF_DIR=...] [SPARK_GRAFT_CPUS=N] [SPARK_GRAFT_JAVA_OPTS=...]
+#        tools/bench.sh [main-class, default graft.Bench] [args...]
+# A session setting (graft.Session) is overridden by Spark's own system
+# property, e.g. the sort-merge-join A/B of the bench:
+#   SPARK_GRAFT_JAVA_OPTS=-Dspark.sql.join.preferSortMergeJoin=true tools/bench.sh
+# Isolated timings of a few queries in one JVM:
+#   tools/bench.sh graft.tools.Probe time <sfDir> <q1,q2,...> [passes]
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="${1:-graft.Bench}"
