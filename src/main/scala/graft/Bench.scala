@@ -102,6 +102,11 @@ object Bench {
     // oracle twin, the bootstrap/graph heavies, and the two AQE-noise
     // regulars. SOAK tables reference these numbers instead of
     // re-deriving them.
+    // These runs share the heap of the three packed passes before them
+    // (~1,400 query runs), so some read high: s6_pca_whiten read 5.16 s
+    // here against 3.61–3.97 s as a min-of-3 in a fresh JVM (sf0.1, 4
+    // cores). The clean isolated figure is a fresh-JVM
+    // `graft.tools.Probe time <sfDir> <queries> 3`.
     val isolatedSet = Seq(
       "j3_zip", "m6_logy",
       "pk1_seq_pack", "pk2_budget_select", "pk5_ffd_pack", "st_pack",

@@ -170,7 +170,7 @@ class AutoTimeseries(cv: Int = 2, forecastPeriod: Int = 8,
     val zCi = ForecastFrame.zFor(confInt)
     val candidates: Seq[ModelBuild] = activeFamilies.flatMap {
       case "ML" if classify => Some(new GbtClassifyTs(lags = lags))
-      case "ML" if searchMl => Some(new SearchedGbtModel())
+      case "ML" if searchMl => Some(new SearchedGbtModel(lags = lags, z = zCi))
       case "ML"           => Some(new GbtModel(lags = lags, z = zCi))
       // nChangepoints = -1 → auto piecewise trend (Prophet fits 25
       // potential changepoints by default; auto scales that to the data)

@@ -691,10 +691,10 @@ class ArimaModel(maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
       df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
     tsSchema = schema.copy(exog = numExog)
     series = LocalSeries.collect(df, tsSchema)
-    intervalMs = if (series.n >= 2) series.ts(1) - series.ts(0) else 86400000L
+    intervalMs = series.intervalMs
     val spark = df.sparkSession
     val xs = xsAll
-    val scores = LocalSeries.foldBounds(series.n, cv, h).map { case (trainEnd, testEnd) =>
+    val scores = CvScores.expanding(series.n, cv, h) { (trainEnd, testEnd) =>
       val train = series.y.take(trainEnd)
       val trainX = if (xs.isEmpty) xs else xs.take(trainEnd)
       val f = search(spark, train, trainX)
@@ -703,7 +703,7 @@ class ArimaModel(maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
       LocalSeries.score(series.y.slice(trainEnd, testEnd), pred)
     }
     best = search(spark, series.y, xs)
-    CvScores(scores.map(_._1), scores.map(_._2))
+    scores
   }
 
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {

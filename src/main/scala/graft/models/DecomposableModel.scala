@@ -232,14 +232,14 @@ class DecomposableModel(seasonalPeriod: Int, fourierOrder: Int = 3,
     nExog = schema.exog.size
     tsColName = schema.tsCol
     exogNames = schema.exog
-    intervalMs = if (series.n >= 2) series.ts(1) - series.ts(0) else 86400000L
+    intervalMs = series.intervalMs
     val nScale = series.n.toDouble
     // in-sample fold timestamps are observed; test-fold rows too (the fold
     // bound never exceeds n), so tsAt reads straight from the series
     val tsAt: Int => Long = t =>
       if (t < series.n) series.ts(t)
       else ForecastFrame.nextTs(series.ts.last, intervalMs, t - series.n + 1)
-    val scores = LocalSeries.foldBounds(series.n, cv, h).map { case (trainEnd, testEnd) =>
+    val scores = CvScores.expanding(series.n, cv, h) { (trainEnd, testEnd) =>
       // changepoint grid recomputed per fold from the TRAIN length only —
       // a fold must not place hinges in its own test window
       val foldCps = changepointsFor(trainEnd)
@@ -258,7 +258,7 @@ class DecomposableModel(seasonalPeriod: Int, fourierOrder: Int = 3,
       series.y(t) - predictAt(f, t, nScale, holAt(series.ts(t)),
         series.exog(t), cpsFinal, yScale)
     }.toArray
-    CvScores(scores.map(_._1), scores.map(_._2))
+    scores
   }
 
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {

@@ -211,9 +211,12 @@ object GbtClassify {
 
 /** ModelBuild adapter: time-series CLASSIFICATION (the categorical-target
   * branch of ML mode — `ml_models.py:306-335` + `analyze_problem_type`,
-  * `ml_models.py:570-616`). Mirrors [[GbtModel]]'s supervised reshape —
-  * lagged target (as class indices) + calendar features + exog — but
-  * trains [[GbtClassify]] and forecasts recursively over class indices.
+  * `ml_models.py:570-616`). It runs [[GbtModel]]'s ML core ([[MlCore]]):
+  * the same cached supervised frame — lagged target (as class indices) +
+  * calendar features + exog, NLP exog as bag-of-words — the same fold
+  * runner with one candidate (fold fits and full fit as one concurrent
+  * batch), and the same bounded state and recursive forecast loop, but it
+  * trains [[GbtClassify]] and forecasts over class indices.
   *
   * Scoring deviation, documented: CvScores carries the per-fold
   * MISCLASSIFICATION RATE in both slots (an RMSE is meaningless over
@@ -228,127 +231,39 @@ class GbtClassifyTs(lags: Int = 2, maxIter: Int = 30, maxDepth: Int = 4)
 
   private var clf: GbtClassify = _
   private var vocab: Array[String] = _
-  private var schema: TsSchema = _
-  private var tailIdx: Array[Double] = _
-  private var lastExog: Array[Double] = _
-  private var lastTsMs: Long = _
-  private var intervalMs: Long = _
-  // NLP exog → frozen-vocabulary bag-of-words (see GbtModel — same rule)
-  private var nlpCols: Seq[String] = Nil
-  private var nlpVocabs: Map[String, Array[String]] = Map.empty
-  private var lastBow: Map[String, Array[Double]] = Map.empty
-  private def numExog: Seq[String] = {
-    val nlp = nlpCols.toSet
-    schema.exog.filterNot(nlp)
-  }
+  private var state: MlCore.State = _
 
   def classes: Seq[String] = vocab.toSeq
 
-  private def featureNames: Seq[String] =
-    (1 to lags).map(i => s"lagidx$i") ++
-      Seq("f_month", "f_quarter", "f_dow", "f_dom") ++ numExog ++
-      nlpCols.map(c => s"${c}_bow")
-
-  /** Supervised frame: lagged class indices + calendar + exog (NLP exog
-    * as bag-of-words vectors). Bounded-series contract (SURVEY §4) —
-    * single unpartitioned window. */
-  private def supervised(df: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy().orderBy(col(schema.tsCol))
-    val indexed = df.withColumn("label_idx",
-      GbtClassify.indexExpr(schema.target, vocab))
-    val lagged = (1 to lags).foldLeft(indexed) { (d, i) =>
-      d.withColumn(s"lagidx$i", lag(col("label_idx"), i).over(w))
-    }
-    val base = lagged.select((Seq(col(schema.tsCol), col(schema.target)) ++
-      (1 to lags).map(i => col(s"lagidx$i")) ++
-      Seq(month(col(schema.tsCol)).cast("double").as("f_month"),
-          quarter(col(schema.tsCol)).cast("double").as("f_quarter"),
-          weekday(col(schema.tsCol)).cast("double").as("f_dow"),
-          dayofmonth(col(schema.tsCol)).cast("double").as("f_dom")) ++
-      numExog.map(c => col(c).cast("double").as(c)) ++
-      nlpCols.map(col)): _*)
-      .na.drop()
-    nlpCols.foldLeft(base) { (d, c) =>
-      NlpFeatures.withBow(d, c, nlpVocabs(c), s"${c}_bow")
-    }
-  }
-
   def fit(df: DataFrame, tsSchema: TsSchema, cv: Int, h: Int): CvScores = {
-    schema = tsSchema
-    vocab = GbtClassify.labelVocab(df, schema.target)
-    nlpCols = NlpFeatures.detect(df, schema.exog)
-    nlpVocabs = nlpCols.map(c =>
-      c -> NlpFeatures.vocabulary(df, c, 50)).toMap
-    val sup = supervised(df).cache()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy().orderBy(col(schema.tsCol))
-    val withRn = sup.withColumn("rn", row_number().over(w)).cache()
-    val n = withRn.count().toInt
-    // per-fold misclassification rate on the held-out window (see
-    // scoring deviation in the class scaladoc)
-    val errs = LocalSeries.foldBounds(n, cv, h).map { case (trainEnd, testEnd) =>
-      val foldClf = new GbtClassify(maxIter, maxDepth)
-      foldClf.fit(withRn.filter(col("rn") <= trainEnd),
-                  featureNames, schema.target, Some(vocab))
-      1.0 - foldClf.accuracy(
-        withRn.filter(col("rn") > trainEnd && col("rn") <= testEnd))
-    }
-    clf = new GbtClassify(maxIter, maxDepth)
-    clf.fit(withRn, featureNames, schema.target, Some(vocab))
-    // tail state for the recursive loop (bounded collects: lags rows,
-    // 2 rows for the interval)
-    val tail = withRn.orderBy(col("rn").desc).limit(lags).orderBy(col("rn"))
-      .select((Seq(col(schema.tsCol).cast("timestamp").cast("double") * 1000,
-                   GbtClassify.indexExpr(schema.target, vocab)) ++
-               numExog.map(c => col(c).cast("double"))): _*)
-      .collect()
-    tailIdx = tail.map(_.getDouble(1))
-    lastExog = if (numExog.nonEmpty)
-      numExog.indices.map(i => tail.last.getDouble(2 + i)).toArray
-    else Array.empty
-    lastBow = if (nlpCols.isEmpty) Map.empty else {
-      val lastRow = df.orderBy(col(schema.tsCol).desc).limit(1)
-        .select(nlpCols.map(col): _*).head()
-      nlpCols.zipWithIndex.map { case (c, i) =>
-        c -> NlpFeatures.bowLocal(Option(lastRow.getString(i)).getOrElse(""),
-                                  nlpVocabs(c))
-      }.toMap
-    }
-    lastTsMs = tail.last.getDouble(0).toLong
-    val firstTwo = df.orderBy(col(schema.tsCol)).limit(2)
-      .select(col(schema.tsCol).cast("timestamp").cast("double") * 1000).collect()
-    intervalMs = if (firstTwo.length == 2)
-      (firstTwo(1).getDouble(0) - firstTwo(0).getDouble(0)).toLong else 86400000L
-    withRn.unpersist(); sup.unpersist()
-    CvScores(errs, errs)
+    val target = tsSchema.target
+    vocab = GbtClassify.labelVocab(df, target)
+    val in = MlCore.inputs(df, tsSchema, lags, "lagidx", 50)
+    val index = GbtClassify.indexExpr(target, vocab)
+    val (frame, n) = MlCore.frame(df, in, index, Seq(col(target)), assemble = false)
+    def fitOn(p: GbtModel.GbtParams, rows: DataFrame) =
+      new GbtClassify(p.maxIter, p.maxDepth, p.stepSize)
+        .fit(rows, in.featureCols, target, Some(vocab))
+    try {
+      // the one candidate: this model's depth and iterations, GbtClassify's step
+      val (_, scores, fitted) =
+        MlCore.run(frame, n, cv, h, Seq(GbtModel.GbtParams(maxDepth, maxIter, 0.1))) {
+          (p, train, test) =>
+            // the fold's misclassification rate, in both score slots
+            val err = 1.0 - fitOn(p, train).accuracy(test)
+            (err, err)
+        }(fitOn(_, frame))
+      clf = fitted
+      state = MlCore.state(df, in, frame, index)
+      scores
+    } finally frame.unpersist()
   }
 
-  /** T14-style recursive loop over class indices: predict the next class,
-    * feed it back as the newest lag. Local model scoring — no per-step
-    * Spark job. */
-  def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {
-    import java.time.{Instant, ZoneOffset}
-    val futureExog: Array[Array[Double]] = future match {
-      case Some(f) if numExog.nonEmpty => FutureExog.collect(f, schema.tsCol, numExog)
-      case _ => Array.empty
-    }
-    val bowTail: Array[Double] = nlpCols.toArray.flatMap(lastBow(_))
-    val buf = scala.collection.mutable.ArrayBuffer(tailIdx.toIndexedSeq: _*)
-    val out = new Array[Double](h)
-    for (i <- 0 until h) {
-      val ts = ForecastFrame.nextTs(lastTsMs, intervalMs, i + 1)
-      val dt = Instant.ofEpochMilli(ts).atZone(ZoneOffset.UTC)
-      val cal = Array(dt.getMonthValue.toDouble,
-        ((dt.getMonthValue - 1) / 3 + 1).toDouble,
-        dt.getDayOfWeek.getValue.toDouble - 1.0, dt.getDayOfMonth.toDouble)
-      val lagVals = (1 to lags).map(l => buf(buf.length - l)).toArray
-      val exog = if (i < futureExog.length) futureExog(i) else lastExog
-      out(i) = clf.predictLocal(lagVals ++ cal ++ exog ++ bowTail)
-      buf += out(i)
-    }
-    ForecastFrame.build(spark, lastTsMs, intervalMs, out, Double.NaN)
-  }
+  /** The recursive loop over class indices: predict the next class, feed
+    * it back as the newest lag. */
+  def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame =
+    ForecastFrame.build(spark, state.lastTsMs, state.intervalMs,
+      state.forecast(h, future)(clf.predictLocal), Double.NaN)
 
   /** Persist the OVR ensembles + the bounded recursive-loop state. */
   def save(dir: String): Unit = {
@@ -357,12 +272,7 @@ class GbtClassifyTs(lags: Int = 2, maxIter: Int = 30, maxDepth: Int = 4)
     Persist.writeJson(dir,
       ("type" -> "ml_classify") ~ ("lags" -> lags) ~ ("maxIter" -> maxIter) ~
       ("maxDepth" -> maxDepth) ~ ("vocab" -> vocab.toList) ~
-      ("schema" -> Persist.schemaJson(schema)) ~
-      ("tailIdx" -> tailIdx.toList) ~ ("lastExog" -> lastExog.toList) ~
-      ("lastTsMs" -> lastTsMs) ~ ("intervalMs" -> intervalMs) ~
-      ("nlpCols" -> nlpCols.toList) ~
-      ("nlpVocabs" -> nlpVocabs.map { case (k, v) => k -> v.toList }) ~
-      ("lastBow" -> lastBow.map { case (k, v) => k -> v.toList }))
+      state.json("tailIdx", None))
   }
 }
 
@@ -375,14 +285,7 @@ object GbtClassifyTs {
       (j \ "maxIter").extract[Int], (j \ "maxDepth").extract[Int])
     m.clf = GbtClassify.loadFitted(s"$dir/clf")
     m.vocab = (j \ "vocab").extract[Array[String]]
-    m.schema = Persist.schemaFrom(j \ "schema")
-    m.tailIdx = (j \ "tailIdx").extract[Array[Double]]
-    m.lastExog = (j \ "lastExog").extract[Array[Double]]
-    m.lastTsMs = (j \ "lastTsMs").extract[Long]
-    m.intervalMs = (j \ "intervalMs").extract[Long]
-    m.nlpCols = (j \ "nlpCols").extract[Seq[String]]
-    m.nlpVocabs = (j \ "nlpVocabs").extract[Map[String, Array[String]]]
-    m.lastBow = (j \ "lastBow").extract[Map[String, Array[Double]]]
+    m.state = MlCore.State.load(j, "tailIdx")(_ => "lagidx")
     m
   }
 }

@@ -1,19 +1,225 @@
 package graft.models
 
 import java.time.{Instant, ZoneOffset}
+import java.util.concurrent.Executors
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Try
+
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
 
-import graft.core.{TimeSeriesOps => TS}
+import GbtModel.GbtParams
+
+/** The ML core that [[GbtModel]] (fixed or searched) and [[GbtClassifyTs]]
+  * share, so the GBT fit → score → forecast path exists once:
+  *  - (a) one supervised frame per fit ([[frame]]), cached once and read by
+  *    every fold fit, every search candidate and the full-frame fit;
+  *  - (b) one fold runner ([[run]]) over (candidate × fold) fits;
+  *  - (c) one bounded forecast state ([[State]]) with the recursive
+  *    forecast loop and its params.json block. */
+private[models] object MlCore {
+  import Persist.formats
+
+  val Calendar = Seq("f_month", "f_quarter", "f_dow", "f_dom")
+
+  /** Calendar features in Spark (training): month, quarter, day of week
+    * (0 = Monday), day of month. [[calendarLocal]] is the forecast twin. */
+  def calendarCols(tsCol: String): Seq[Column] =
+    Seq(month(col(tsCol)), quarter(col(tsCol)), weekday(col(tsCol)), dayofmonth(col(tsCol)))
+      .zip(Calendar).map { case (c, n) => c.cast("double").as(n) }
+
+  def calendarLocal(tsMs: Long): Array[Double] = {
+    val dt = Instant.ofEpochMilli(tsMs).atZone(ZoneOffset.UTC)
+    Array(dt.getMonthValue.toDouble, ((dt.getMonthValue - 1) / 3 + 1).toDouble,
+          dt.getDayOfWeek.getValue.toDouble - 1.0, dt.getDayOfMonth.toDouble)
+  }
+
+  /** What a fit reads besides the rows: the schema, the lag count and
+    * column stem, and the NLP exog columns (ColumnClassifier mean-length
+    * rule) with their frozen vocabularies — they become bag-of-words
+    * vectors instead of being cast to null and dropped
+    * (`ml_models.py:22,470`). */
+  final case class Inputs(schema: TsSchema, lags: Int, lagStem: String,
+                          nlpCols: Seq[String], nlpVocabs: Map[String, Array[String]]) {
+    def numExog: Seq[String] = schema.exog.filterNot(nlpCols.toSet)
+    def lagCols: Seq[String] = (1 to lags).map(i => s"$lagStem$i")
+    /** The order of the training vector and of the forecast vector. */
+    def featureCols: Seq[String] =
+      lagCols ++ Calendar ++ numExog ++ nlpCols.map(c => s"${c}_bow")
+  }
+
+  def inputs(df: DataFrame, schema: TsSchema, lags: Int, lagStem: String,
+             vocabSize: Int): Inputs = {
+    val nlp = NlpFeatures.detect(df, schema.exog)
+    Inputs(schema, lags, lagStem, nlp,
+      nlp.map(c => c -> NlpFeatures.vocabulary(df, c, vocabSize)).toMap)
+  }
+
+  /** (a) The supervised frame of one fit: the ts, the caller's `labels`,
+    * `lags` lags of `lagOf`, the calendar features, numeric exog as double,
+    * the NLP text and its `<col>_bow` vector, `features` (every feature
+    * column assembled) when `assemble`, and `rn`, the 1-based rank in time.
+    * Rows with a null anywhere are dropped (the first `lags`, and any a
+    * label expression nulls out). Cached once; returns the frame and its
+    * row count, and the caller unpersists it.
+    *
+    * BOUNDED-SERIES CONTRACT (same warning as `TimeSeriesOps.seriesWindow`):
+    * the unpartitioned window funnels the whole series through ONE task,
+    * so the frame is one partition — correct only because this is the
+    * single-series path, bounded by series length (SURVEY §4). For many
+    * series at scale use `scale.PerSeriesForecast` / `scale.PerSeriesArima`,
+    * which run one bounded task per series. */
+  def frame(df: DataFrame, in: Inputs, lagOf: Column, labels: Seq[Column],
+            assemble: Boolean): (DataFrame, Int) = {
+    val ts = in.schema.tsCol
+    val w = Window.orderBy(col(ts))
+    val sup = df.select((col(ts) +: labels) ++
+        in.lagCols.zipWithIndex.map { case (c, i) => lag(lagOf, i + 1).over(w).cast("double").as(c) } ++
+        calendarCols(ts) ++ in.numExog.map(c => col(c).cast("double").as(c)) ++
+        in.nlpCols.map(col): _*)
+      .na.drop()
+    val bow = in.nlpCols.foldLeft(sup) { (d, c) =>
+      NlpFeatures.withBow(d, c, in.nlpVocabs(c), s"${c}_bow")
+    }
+    val feats = if (!assemble) bow else new VectorAssembler()
+      .setInputCols(in.featureCols.toArray).setOutputCol("features").transform(bow)
+    val f = feats.withColumn("rn", row_number().over(w)).cache()
+    (f, f.count().toInt)
+  }
+
+  /** (b) The fold runner: `score(p, train, test)` → (rmse, normalized rmse)
+    * for every candidate on every expanding fold of the n-row frame, all
+    * at once as driver-submitted Spark jobs on a bounded pool (the
+    * scheduler interleaves them, the way the ARIMA grid parallelizes).
+    *
+    * One candidate is the fixed-params model: nothing is searched, so its
+    * full-frame fit `full(p)` joins the same batch, and any failure is
+    * rethrown as it is. Several candidates are a search: like
+    * RandomizedSearchCV's error_score=nan, a failing (candidate × fold) fit
+    * drops its candidate, which must score EVERY fold (partial coverage
+    * would bias its mean down); the lowest mean fold RMSE wins (ties by
+    * depth, iterations, step) and is then fit on the same frame.
+    * Returns the winner, its fold scores and its full-frame fit. */
+  def run[F](frame: DataFrame, n: Int, cv: Int, h: Int, cands: Seq[GbtParams])(
+      score: (GbtParams, DataFrame, DataFrame) => (Double, Double))(
+      full: GbtParams => F): (GbtParams, CvScores, F) = {
+    val rn = col("rn")
+    val folds = LocalSeries.foldBounds(n, cv, h)
+    val pool = Executors.newFixedThreadPool(math.min(8, cands.size * folds.size + 1))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
+    try {
+      val pairs = for (p <- cands; (trainEnd, testEnd) <- folds) yield p -> Future(Try(
+        score(p, frame.filter(rn <= trainEnd), frame.filter(rn > trainEnd && rn <= testEnd))))
+      val fixed = if (cands.size == 1) Some(Future(full(cands.head))) else None
+      val scored = pairs.map { case (p, f) => p -> await(f) }
+      val (best, scores) =
+        if (fixed.isDefined) (cands.head, scored.map(_._2.get))
+        else {
+          val complete = scored.groupBy(_._1).toSeq.collect {
+            case (p, xs) if xs.forall(_._2.isSuccess) => (p, xs.map(_._2.get))
+          }
+          require(complete.nonEmpty, "every search candidate failed to fit")
+          complete.minBy { case (p, s) =>
+            (s.map(_._1).sum / s.length, p.maxDepth, p.maxIter, p.stepSize)
+          }
+        }
+      (best, CvScores.of(scores), fixed.fold(full(best))(await))
+    } finally pool.shutdown()
+  }
+
+  /** (c) The bounded state the recursive forecast reads: the last `lags`
+    * label values, the last row's numeric exog, ts and bag-of-words (future
+    * text is unknown, so the last document stands in, the exact analogue
+    * of the last exog), and the series interval. */
+  final case class State(in: Inputs, tail: Array[Double], lastExog: Array[Double],
+                         lastTsMs: Long, intervalMs: Long,
+                         lastBow: Map[String, Array[Double]]) {
+
+    /** T14 — recursive one-step loop (`build_ml.py:595-670`): `step`
+      * scores one feature vector locally, and its output is fed back as the
+      * newest lag. `future`, when given, supplies KNOWN future exog: rows
+      * ordered by ts, step i uses row i's exog, past the frame's end the
+      * last training exog. No Spark job per step. */
+    def forecast(h: Int, future: Option[DataFrame])(step: Array[Double] => Double): Array[Double] = {
+      val futureExog: Array[Array[Double]] = future match {
+        case Some(f) if in.numExog.nonEmpty => FutureExog.collect(f, in.schema.tsCol, in.numExog)
+        case _ => Array.empty
+      }
+      val bowTail = in.nlpCols.toArray.flatMap(lastBow(_))
+      val buf = scala.collection.mutable.ArrayBuffer(tail.toIndexedSeq: _*)
+      val out = new Array[Double](h)
+      for (i <- 0 until h) {
+        val lagVals = (1 to in.lags).map(l => buf(buf.length - l)).toArray
+        val exog = if (i < futureExog.length) futureExog(i) else lastExog
+        out(i) = step(lagVals ++ calendarLocal(ForecastFrame.nextTs(lastTsMs, intervalMs, i + 1)) ++
+                      exog ++ bowTail)
+        buf += out(i)
+      }
+      out
+    }
+
+    /** The params.json block; `tailKey` names the lag tail. */
+    def json(tailKey: String, residSigma: Option[Double]): JObject =
+      ("schema" -> Persist.schemaJson(in.schema)) ~ (tailKey -> tail.toList) ~
+      ("lastExog" -> lastExog.toList) ~ ("lastTsMs" -> lastTsMs) ~
+      ("intervalMs" -> intervalMs) ~ ("residSigma" -> residSigma) ~
+      ("nlpCols" -> in.nlpCols.toList) ~
+      ("nlpVocabs" -> in.nlpVocabs.map { case (k, v) => k -> v.toList }) ~
+      ("lastBow" -> lastBow.map { case (k, v) => k -> v.toList })
+  }
+
+  object State {
+    def load(j: JValue, tailKey: String)(lagStem: TsSchema => String): State = {
+      val schema = Persist.schemaFrom(j \ "schema")
+      State(Inputs(schema, (j \ "lags").extract[Int], lagStem(schema),
+          (j \ "nlpCols").extract[Seq[String]],
+          (j \ "nlpVocabs").extract[Map[String, Array[String]]]),
+        (j \ tailKey).extract[Array[Double]], (j \ "lastExog").extract[Array[Double]],
+        (j \ "lastTsMs").extract[Long], (j \ "intervalMs").extract[Long],
+        (j \ "lastBow").extract[Map[String, Array[Double]]])
+    }
+  }
+
+  /** The forecast state: `value` of the last `lags` rows of `rows` by time,
+    * with the last one's ts, numeric exog and text, and the interval from
+    * `df`'s first two timestamps. DRIVER BOUND: two `limit` collects,
+    * `lags` + 2 rows whatever the series length. */
+  def state(df: DataFrame, in: Inputs, rows: DataFrame, value: Column): State = {
+    val ts = col(in.schema.tsCol)
+    val ms = ts.cast("timestamp").cast("double") * 1000
+    val nNum = in.numExog.size
+    val tail = rows.orderBy(ts.desc).limit(in.lags)
+      .select((Seq(ms, value.cast("double")) ++ in.numExog.map(c => col(c).cast("double")) ++
+               in.nlpCols.map(col)): _*)
+      .collect().reverse
+    val last = tail.last
+    val firstTwo = df.orderBy(ts).limit(2).select(ms).collect().map(_.getDouble(0).toLong)
+    State(in, tail.map(_.getDouble(1)), Array.tabulate(nNum)(i => last.getDouble(2 + i)),
+      last.getDouble(0).toLong, LocalSeries.interval(firstTwo),
+      in.nlpCols.zipWithIndex.map { case (c, i) =>
+        c -> NlpFeatures.bowLocal(Option(last.getString(2 + nNum + i)).getOrElse(""),
+                                  in.nlpVocabs(c))
+      }.toMap)
+  }
+}
 
 /** M6/M8 — the ML path (`models/build_ml.py:88-414`): supervised reshape
-  * (target lags + calendar features + exog) feeding a gradient-boosted
-  * tree regressor, with expanding-window CV and the reference's RECURSIVE
-  * one-step forecast loop (T14, `build_ml.py:595-670`).
+  * (target lags + calendar features + exog, NLP exog as bag-of-words)
+  * feeding a gradient-boosted tree regressor, with expanding-window CV and
+  * the reference's RECURSIVE one-step forecast loop (T14,
+  * `build_ml.py:595-670`). The fit runs on the shared ML core ([[MlCore]]):
+  * one cached supervised frame, the fold runner with this model as its one
+  * candidate (the fold fits and the full-frame fit run as one concurrent
+  * batch), and the bounded forecast state. [[GbtModel.fitSearched]] runs
+  * the same core over many candidates.
   *
   * `logY` is the reference's `log_y` knob (`ml_models.py:117,136-138,
   * 186-187`): the LABEL is log-transformed before the fit (zero targets
@@ -28,156 +234,92 @@ import graft.core.{TimeSeriesOps => TS}
   * reference's dask-xgboost path collapses into this, SURVEY §2.10 M8);
   * feature building is window/codegen work; the recursive loop runs on
   * the driver against the LOCAL `GBTRegressionModel.predict(Vector)` —
-  * h is small, no per-step Spark job. */
+  * h is small, no per-step Spark job.
+  *
+  * DRIVER BOUND of a fit: the forecast state's `lags` + 2 rows, each fold's
+  * test predictions (at most h rows), one residual aggregate row, the NLP
+  * vocabularies (`nlpVocabSize` terms each) and MLlib's per-tree split and
+  * bin statistics (bounded by its bins × features); none grows with the
+  * series length. */
 class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
                stepSize: Double = 0.1, logY: Boolean = false,
                nlpVocabSize: Int = 50, z: Double = 1.96) extends ModelBuild {
   val name = "ML"
 
   private var model: GBTRegressionModel = _
-  private var schema: TsSchema = _
-  private var tailY: Array[Double] = _      // last `lags` observations
-  private var lastExog: Array[Double] = _
-  private var lastTsMs: Long = _
-  private var intervalMs: Long = _
+  private var state: MlCore.State = _
   private var residSigma: Double = _
-  // NLP exog columns (ColumnClassifier mean-length rule) become
-  // bag-of-words vectors under a frozen deterministic vocabulary instead
-  // of being cast to null and dropped — `ml_models.py:22,470`
-  private var nlpCols: Seq[String] = Nil
-  private var nlpVocabs: Map[String, Array[String]] = Map.empty
-  private var lastBow: Map[String, Array[Double]] = Map.empty
-  private def numExog: Seq[String] = {
-    val nlp = nlpCols.toSet
-    schema.exog.filterNot(nlp)
-  }
 
-  /** calendar features used both in Spark (training) and locally
-    * (recursive forecast): month, quarter, dayofweek(0=Mon), dayofmonth. */
-  private def calendarCols(tsCol: String) = Seq(
-    month(col(tsCol)).cast("double").as("f_month"),
-    quarter(col(tsCol)).cast("double").as("f_quarter"),
-    weekday(col(tsCol)).cast("double").as("f_dow"),
-    dayofmonth(col(tsCol)).cast("double").as("f_dom"))
-
-  private def calendarLocal(tsMs: Long): Array[Double] = {
-    val dt = Instant.ofEpochMilli(tsMs).atZone(ZoneOffset.UTC)
-    Array(dt.getMonthValue.toDouble, ((dt.getMonthValue - 1) / 3 + 1).toDouble,
-          dt.getDayOfWeek.getValue.toDouble - 1.0, dt.getDayOfMonth.toDouble)
-  }
-
-  private def featureNames: Seq[String] =
-    (1 to lags).map(i => s"${schema.target}_lag$i") ++
-      Seq("f_month", "f_quarter", "f_dow", "f_dom") ++ numExog
-
-  /** Supervised frame: lags over the ordered window + calendar + exog,
-    * plus the fit label `y_fit` — the raw target, or its log under
-    * `logY` (zeros → 1e-15 first; negatives go null and are dropped). */
-  private def supervised(df: DataFrame): DataFrame = {
-    val lagged = TS.addLags(df, Seq(schema.target), lags, schema.tsCol)
-    val y = col(schema.target).cast("double")
-    val label = if (logY) log(when(y === 0.0, lit(1e-15)).otherwise(y)) else y
-    lagged.select((Seq(col(schema.tsCol), y.as(schema.target), label.as("y_fit")) ++
-      (1 to lags).map(i => col(s"${schema.target}_lag$i").cast("double")) ++
-      calendarCols(schema.tsCol) ++
-      numExog.map(c => col(c).cast("double").as(c)) ++
-      nlpCols.map(col)): _*)
-      .na.drop()
-  }
+  private def params = GbtParams(maxDepth, maxIter, stepSize)
 
   /** exp-back-transform for anything the model predicts (identity unless
     * `logY`) — reference `np.exp(model.predict(...))`, `ml_models.py:187`. */
   private def back(p: Double): Double = if (logY) math.exp(p) else p
 
-  private def assemble(df: DataFrame): DataFrame = {
-    val withVecs = nlpCols.foldLeft(df) { (d, c) =>
-      NlpFeatures.withBow(d, c, nlpVocabs(c), s"${c}_bow")
-    }
-    new VectorAssembler()
-      .setInputCols((featureNames ++ nlpCols.map(c => s"${c}_bow")).toArray)
-      .setOutputCol("features").transform(withVecs)
-  }
-
-  private def newGbt = new GBTRegressor()
+  private def newGbt(p: GbtParams) = new GBTRegressor()
     .setLabelCol("y_fit").setFeaturesCol("features")
-    .setMaxIter(maxIter).setMaxDepth(maxDepth).setStepSize(stepSize).setSeed(42)
+    .setMaxIter(p.maxIter).setMaxDepth(p.maxDepth).setStepSize(p.stepSize).setSeed(42)
 
-  /** BOUNDED-SERIES CONTRACT (same warning as
-    * `TimeSeriesOps.seriesWindow`): the unpartitioned `Window.partitionBy()`
-    * below funnels the whole frame through ONE task — correct only because
-    * fit() is the single-series path, bounded by series length (SURVEY §4).
-    * For many series at scale use `scale.PerSeriesForecast` /
-    * `scale.PerSeriesArima`, which run one bounded task per series. */
-  def fit(df: DataFrame, tsSchema: TsSchema, cv: Int, h: Int): CvScores = {
-    schema = tsSchema
-    nlpCols = NlpFeatures.detect(df, schema.exog)
-    nlpVocabs = nlpCols.map(c =>
-      c -> NlpFeatures.vocabulary(df, c, nlpVocabSize)).toMap
-    val sup = assemble(supervised(df)).cache()
-    val w = Window.partitionBy().orderBy(col(schema.tsCol))
-    val withRn = sup.withColumn("rn", row_number().over(w)).cache()
-    val n = withRn.count()
-    val scores = LocalSeries.foldBounds(n.toInt, cv, h).map { case (trainEnd, testEnd) =>
-      val m = newGbt.fit(withRn.filter(col("rn") <= trainEnd))
-      val test = withRn.filter(col("rn") > trainEnd && col("rn") <= testEnd)
-      // scored in ORIGINAL units (predictions exp'd back under logY) so
-      // fold RMSEs stay comparable across families and log settings
-      val pred = m.transform(test)
-        .select(col(schema.target), col("prediction")).collect()
-      LocalSeries.score(pred.map(_.getDouble(0)), pred.map(r => back(r.getDouble(1))))
-    }
-    model = newGbt.fit(withRn)
-    // residual σ for the CI columns (reference emits NaN CIs for ML,
-    // `build_ml.py:674-683`; we do better with the in-sample residual std)
-    val predCol = if (logY) exp(col("prediction")) else col("prediction")
-    val res = model.transform(withRn)
-      .select(pow(col(schema.target) - predCol, 2)).agg(avg("*")).head().getDouble(0)
-    residSigma = math.sqrt(res)
+  def fit(df: DataFrame, tsSchema: TsSchema, cv: Int, h: Int): CvScores =
+    fitCandidates(Seq(params), df, tsSchema, cv, h)._3
 
-    val localTail = LocalSeries.collect(df, schema.copy(exog = numExog))
-    tailY = localTail.y.takeRight(lags)
-    lastExog = if (numExog.nonEmpty) localTail.exog.last else Array.empty
-    // future text is unknown — the recursive loop reuses the LAST observed
-    // document's bag-of-words (the exact analogue of lastExog)
-    lastBow = if (nlpCols.isEmpty) Map.empty else {
-      val lastRow = df.orderBy(col(schema.tsCol).desc).limit(1)
-        .select(nlpCols.map(col): _*).head()
-      nlpCols.zipWithIndex.map { case (c, i) =>
-        c -> NlpFeatures.bowLocal(Option(lastRow.getString(i)).getOrElse(""),
-                                  nlpVocabs(c))
-      }.toMap
-    }
-    lastTsMs = localTail.ts.last
-    intervalMs = if (localTail.n >= 2) localTail.ts(1) - localTail.ts(0) else 86400000L
-    withRn.unpersist(); sup.unpersist()
-    CvScores(scores.map(_._1), scores.map(_._2))
+  /** The ML core over `cands`, which share this model's lags, logY,
+    * vocabulary size and z: the fit label `y_fit` is the raw target, or its
+    * log under `logY` (zeros → 1e-15 first; negatives go null and are
+    * dropped). Returns the fitted winner (this model when its own params
+    * win), its params and its fold scores. */
+  private def fitCandidates(cands: Seq[GbtParams], df: DataFrame, schema: TsSchema,
+                            cv: Int, h: Int): (GbtModel, GbtParams, CvScores) = {
+    val in = MlCore.inputs(df, schema, lags, s"${schema.target}_lag", nlpVocabSize)
+    val y = col(schema.target).cast("double")
+    val label = if (logY) log(when(y === 0.0, lit(1e-15)).otherwise(y)) else y
+    val (frame, n) = MlCore.frame(df, in, y, Seq(y.as(schema.target), label.as("y_fit")),
+                                  assemble = true)
+    try {
+      val (best, scores, (fitted, sigma)) = MlCore.run(frame, n, cv, h, cands) { (p, train, test) =>
+        // scored in ORIGINAL units (predictions exp'd back under logY) so
+        // fold RMSEs stay comparable across families and log settings
+        val pred = newGbt(p).fit(train).transform(test)
+          .select(col(schema.target), col("prediction")).collect()
+        LocalSeries.score(pred.map(_.getDouble(0)), pred.map(r => back(r.getDouble(1))))
+      } { p =>
+        val m = newGbt(p).fit(frame)
+        // residual σ for the CI columns (reference emits NaN CIs for ML,
+        // `build_ml.py:674-683`; we do better with the in-sample residual std)
+        val predCol = if (logY) exp(col("prediction")) else col("prediction")
+        (m, math.sqrt(m.transform(frame).select(pow(col(schema.target) - predCol, 2))
+              .agg(avg("*")).head().getDouble(0)))
+      }
+      val winner = if (best == params) this
+        else new GbtModel(lags, best.maxIter, best.maxDepth, best.stepSize, logY, nlpVocabSize, z)
+      winner.model = fitted
+      winner.residSigma = sigma
+      winner.state = MlCore.state(df, in, df, y)
+      (winner, best, scores)
+    } finally frame.unpersist()
   }
 
-  /** T14 — recursive one-step loop: predict, feed the prediction back in
-    * as the newest lag, repeat. `future`, when given, supplies KNOWN
-    * future exogenous values (reference `predict(testdata)` semantics,
-    * `build_ml.py:595-670`): rows ordered by the ts column with the
-    * schema's exog columns; step i uses row i's exog (falling back to the
-    * last training exog past the frame's end). */
-  def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {
-    val futureExog: Array[Array[Double]] = future match {
-      case Some(f) if numExog.nonEmpty => FutureExog.collect(f, schema.tsCol, numExog)
-      case _ => Array.empty
-    }
-    val bowTail: Array[Double] = nlpCols.toArray.flatMap(lastBow(_))
-    val buf = scala.collection.mutable.ArrayBuffer(tailY.toIndexedSeq: _*)
-    val out = new Array[Double](h)
-    for (i <- 0 until h) {
-      val ts = ForecastFrame.nextTs(lastTsMs, intervalMs, i + 1)
-      val lagVals = (1 to lags).map(l => buf(buf.length - l)).toArray
-      val exog = if (i < futureExog.length) futureExog(i) else lastExog
-      val feats = lagVals ++ calendarLocal(ts) ++ exog ++ bowTail
-      val p = back(model.predict(Vectors.dense(feats)))
-      out(i) = p
-      buf += p
-    }
-    ForecastFrame.build(spark, lastTsMs, intervalMs, out, residSigma, z)
+  /** [[GbtModel.fitSearched]] from this model's lags, logY, vocabulary size
+    * and z. RandomizedSearchCV analogue: sample with a fixed seed, dedupe.
+    * This model's params are always candidate zero, so the searched result
+    * is never worse than the fixed-parameter model under the shared folds. */
+  private[models] def search(df: DataFrame, tsSchema: TsSchema, cv: Int, h: Int,
+                             nIter: Int, seed: Long): GbtModel.SearchResult = {
+    val rnd = new scala.util.Random(seed)
+    val depths = Array(2, 3, 4, 5)
+    val iters  = Array(20, 40, 60, 80)
+    val steps  = Array(0.05, 0.1, 0.15, 0.2)
+    val cands = (params +: Seq.fill(nIter)(GbtParams(
+      depths(rnd.nextInt(depths.length)),
+      iters(rnd.nextInt(iters.length)),
+      steps(rnd.nextInt(steps.length))))).distinct
+    val (m, p, s) = fitCandidates(cands, df, tsSchema, cv, h)
+    GbtModel.SearchResult(m, p, s.foldRmse, s.foldNormRmse)
   }
+
+  def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame =
+    ForecastFrame.build(spark, state.lastTsMs, state.intervalMs,
+      state.forecast(h, future)(f => back(model.predict(Vectors.dense(f)))), residSigma, z)
 
   /** Top-k feature importances of the fitted ensemble — the reference
     * prints the top-10 after the full-data fit (`ml_models.py:160-177`,
@@ -187,8 +329,9 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
     * `<col>_bow_<term>`), ordered desc with a name tie-break. */
   def featureImportances(spark: SparkSession, k: Int = 10): DataFrame = {
     import spark.implicits._
-    val names = featureNames ++
-      nlpCols.flatMap(c => nlpVocabs(c).map(t => s"${c}_bow_$t"))
+    val in = state.in
+    val names = in.lagCols ++ MlCore.Calendar ++ in.numExog ++
+      in.nlpCols.flatMap(c => in.nlpVocabs(c).map(t => s"${c}_bow_$t"))
     val imp = model.featureImportances.toArray
     require(imp.length == names.length,
       s"importance vector ${imp.length} != feature names ${names.length}")
@@ -199,32 +342,26 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
   /** MLlib writer for the tree ensemble + params-JSON for the bounded
     * local state (lag tail, calendar anchor, NLP vocabularies). */
   def save(dir: String): Unit = {
-    import org.json4s.JsonDSL._
     model.write.overwrite().save(s"$dir/gbt")
     Persist.writeJson(dir,
       ("type" -> "ml") ~ ("lags" -> lags) ~ ("maxIter" -> maxIter) ~
       ("maxDepth" -> maxDepth) ~ ("stepSize" -> stepSize) ~ ("logY" -> logY) ~
       ("nlpVocabSize" -> nlpVocabSize) ~ ("z" -> z) ~
-      ("schema" -> Persist.schemaJson(schema)) ~
-      ("tailY" -> tailY.toList) ~ ("lastExog" -> lastExog.toList) ~
-      ("lastTsMs" -> lastTsMs) ~ ("intervalMs" -> intervalMs) ~
-      ("residSigma" -> residSigma) ~ ("nlpCols" -> nlpCols.toList) ~
-      ("nlpVocabs" -> nlpVocabs.map { case (k, v) => k -> v.toList }) ~
-      ("lastBow" -> lastBow.map { case (k, v) => k -> v.toList }))
+      state.json("tailY", Some(residSigma)))
   }
 }
 
 /** ModelBuild adapter for the searched GBT: fit() runs the randomized
   * hyperparameter search (the reference's RandomizedSearchCV inside its
-  * ML path, `ml_models.py:293-335`) and delegates prediction to the
-  * winner. The reported CV scores are the WINNER's fold scores from the
-  * shared search folds. */
-class SearchedGbtModel(nIter: Int = 15, seed: Long = 42) extends ModelBuild {
+  * ML path, `ml_models.py:293-335`) with this model's lag count and CI
+  * z, and delegates prediction to the winner. The reported CV scores are
+  * the WINNER's fold scores from the shared search folds. */
+class SearchedGbtModel(lags: Int = 2, z: Double = 1.96) extends ModelBuild {
   val name = "ML"
   private var inner: GbtModel = _
 
   def fit(df: DataFrame, schema: TsSchema, cv: Int, h: Int): CvScores = {
-    val r = GbtModel.fitSearched(df, schema, math.max(cv, 1), h, nIter, seed)
+    val r = new GbtModel(lags = lags, z = z).search(df, schema, math.max(cv, 1), h, 15, 42)
     inner = r.model
     CvScores(r.foldRmse, r.foldNormRmse)
   }
@@ -246,15 +383,8 @@ object GbtModel {
       (j \ "logY").extract[Boolean], (j \ "nlpVocabSize").extract[Int],
       (j \ "z").extract[Double])
     m.model = GBTRegressionModel.load(s"$dir/gbt")
-    m.schema = Persist.schemaFrom(j \ "schema")
-    m.tailY = (j \ "tailY").extract[Array[Double]]
-    m.lastExog = (j \ "lastExog").extract[Array[Double]]
-    m.lastTsMs = (j \ "lastTsMs").extract[Long]
-    m.intervalMs = (j \ "intervalMs").extract[Long]
+    m.state = MlCore.State.load(j, "tailY")(s => s"${s.target}_lag")
     m.residSigma = (j \ "residSigma").extract[Double]
-    m.nlpCols = (j \ "nlpCols").extract[Seq[String]]
-    m.nlpVocabs = (j \ "nlpVocabs").extract[Map[String, Array[String]]]
-    m.lastBow = (j \ "lastBow").extract[Map[String, Array[Double]]]
     m
   }
 
@@ -269,90 +399,17 @@ object GbtModel {
 
   /** M7 — randomized hyperparameter search (the reference's
     * `RandomizedSearchCV(n_iter=15, cv=3)` over the GBT family,
-    * `ml_models.py:293-335`): `nIter` (maxDepth, maxIter, stepSize)
-    * triples sampled from the same grid families, each scored by
-    * expanding-window CV — the time-respecting analogue of the
-    * reference's KFold over supervised rows — lowest mean fold RMSE
-    * wins, then the winner is refit on the full frame.
+    * `ml_models.py:293-335`) of a default [[GbtModel]]: `nIter`
+    * (maxDepth, maxIter, stepSize) triples sampled from the same grid
+    * families, each scored by expanding-window CV — the time-respecting
+    * analogue of the reference's KFold over supervised rows — lowest mean
+    * fold RMSE wins, then the winner is refit on the full frame.
     *
-    * The supervised/assembled frame is built and cached ONCE and shared
-    * by every (candidate × fold) fit — the search cost is pure
-    * `GBTRegressor.fit` calls, each itself a distributed job, so on a
-    * cluster the search parallelizes exactly like the ARIMA grid:
-    * driver-orchestrated jobs over a shared cached input. */
+    * It is the ML core's fold runner with many candidates: the supervised
+    * frame is built and cached ONCE and shared by every (candidate × fold)
+    * fit and the winner's refit — the search cost is pure
+    * `GBTRegressor.fit` calls, each itself a distributed job. */
   def fitSearched(df: DataFrame, tsSchema: TsSchema, cv: Int, h: Int,
-                  nIter: Int = 15, seed: Long = 42): SearchResult = {
-    val probe = new GbtModel()
-    probe.schema = tsSchema
-    probe.nlpCols = NlpFeatures.detect(df, tsSchema.exog)
-    probe.nlpVocabs = probe.nlpCols.map(c =>
-      c -> NlpFeatures.vocabulary(df, c, 50)).toMap
-    val sup = probe.assemble(probe.supervised(df)).cache()
-    val w = Window.partitionBy().orderBy(col(tsSchema.tsCol))
-    // one partition: this is the bounded single-series contract (SURVEY
-    // §4) — at ~series length rows, every GBT iteration's jobs are pure
-    // scheduling overhead unless the input is a single cached partition
-    val withRn = sup.withColumn("rn", row_number().over(w)).coalesce(1).cache()
-    val n = withRn.count().toInt
-    val folds = LocalSeries.foldBounds(n, cv, h)
-    // RandomizedSearchCV analogue: sample with a fixed seed, dedupe.
-    // The incumbent default config is always candidate zero, so the
-    // searched result is never worse than the fixed-parameter model
-    // under the shared folds.
-    val rnd = new scala.util.Random(seed)
-    val depths = Array(2, 3, 4, 5)
-    val iters  = Array(20, 40, 60, 80)
-    val steps  = Array(0.05, 0.1, 0.15, 0.2)
-    val cands = (GbtParams(2, 50, 0.1) +: Seq.fill(nIter)(GbtParams(
-      depths(rnd.nextInt(depths.length)),
-      iters(rnd.nextInt(iters.length)),
-      steps(rnd.nextInt(steps.length))))).distinct
-    // every (candidate × fold) fit is independent — run them as
-    // concurrent driver-submitted Spark jobs (the scheduler interleaves
-    // them across executors), exactly how the ARIMA grid parallelizes
-    val pairs = for { p <- cands; f <- folds } yield (p, f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(pairs.size, 1)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    // a failing (candidate x fold) fit is the candidate's problem, not the
-    // search's: like RandomizedSearchCV's error_score=nan default, the pair
-    // is dropped and the candidate excluded unless it scored EVERY fold
-    // (partial coverage would bias its mean down)
-    val futures = pairs.map { case (p, (trainEnd, testEnd)) =>
-      scala.concurrent.Future {
-        scala.util.Try {
-          // probe has logY=false, so y_fit here is the raw target
-          val reg = new GBTRegressor()
-            .setLabelCol("y_fit").setFeaturesCol("features")
-            .setMaxIter(p.maxIter).setMaxDepth(p.maxDepth)
-            .setStepSize(p.stepSize).setSeed(42)
-          val m = reg.fit(withRn.filter(col("rn") <= trainEnd))
-          val pred = m.transform(withRn.filter(col("rn") > trainEnd && col("rn") <= testEnd))
-            .select(col(tsSchema.target), col("prediction")).collect()
-          p -> LocalSeries.score(pred.map(_.getDouble(0)), pred.map(_.getDouble(1)))
-        }.toOption
-      }
-    }
-    val pairScores =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
-        .flatten
-      finally pool.shutdown()
-    val scored = pairScores.groupBy(_._1).toSeq
-      .filter(_._2.size == folds.size) // full fold coverage only
-      .map { case (p, xs) =>
-        (p, xs.map(_._2._1), xs.map(_._2._2)) // per-fold (rmse, norm) lists
-      }
-    require(scored.nonEmpty, "every search candidate failed to fit")
-    withRn.unpersist(); sup.unpersist()
-    val (bestP, bestRmse, bestNorm) = scored.minBy { case (p, rs, _) =>
-      (rs.sum / rs.length, p.maxDepth, p.maxIter, p.stepSize) // deterministic tie-break
-    }
-    val best = new GbtModel(2, bestP.maxIter, bestP.maxDepth, bestP.stepSize)
-    // cv=0 => zero folds: the winner's CV score is already in hand, so
-    // the refit only trains the final model (+ residual sigma/tail state)
-    best.fit(df, tsSchema, 0, h)
-    SearchResult(best, bestP, bestRmse, bestNorm)
-  }
+                  nIter: Int = 15, seed: Long = 42): SearchResult =
+    new GbtModel().search(df, tsSchema, cv, h, nIter, seed)
 }

@@ -15,6 +15,16 @@ case class CvScores(foldRmse: Seq[Double], foldNormRmse: Seq[Double]) {
     if (foldNormRmse.isEmpty) Double.PositiveInfinity else foldNormRmse.sum / foldNormRmse.size
 }
 
+object CvScores {
+  /** Per-fold (rmse, normalized rmse) pairs, in fold order. */
+  def of(folds: Seq[(Double, Double)]): CvScores = CvScores(folds.map(_._1), folds.map(_._2))
+
+  /** The fold loop of every local family: `score(trainEnd, testEnd)` over
+    * the expanding-window folds of an n-point series. */
+  def expanding(n: Int, cv: Int, h: Int)(score: (Int, Int) => (Double, Double)): CvScores =
+    of(LocalSeries.foldBounds(n, cv, h).map { case (trainEnd, testEnd) => score(trainEnd, testEnd) })
+}
+
 /** The reference's model contract (`models/build_base.py:8-91`): fit with
   * expanding-window CV, refit on the full series, forecast h steps ahead
   * returning the S5 sink schema (ts, yhat, mean_se, mean_ci_lower,
@@ -54,6 +64,7 @@ object FutureExog {
 
 case class LocalSeries(ts: Array[Long], y: Array[Double], exog: Array[Array[Double]]) {
   def n: Int = y.length
+  def intervalMs: Long = LocalSeries.interval(ts)
 }
 
 object LocalSeries {
@@ -72,6 +83,10 @@ object LocalSeries {
       rows.map(_.getDouble(1)),
       rows.map(r => Array.tabulate(schema.exog.size)(i => r.getDouble(2 + i))))
   }
+
+  /** The step every family forecasts with: ts(1) − ts(0) of a time-ordered
+    * series, one day when it has fewer than two points. */
+  def interval(ts: Array[Long]): Long = if (ts.length >= 2) ts(1) - ts(0) else 86400000L
 
   /** RMSE + normalized RMSE of a forecast against actuals. */
   def score(actual: Array[Double], pred: Array[Double]): (Double, Double) = {

@@ -126,9 +126,9 @@ class VarModel(maxP: Int = 3, minP: Int = 1, seasonalM: Int = 1,
     require(schema.exog.nonEmpty, "VAR needs at least one companion column (reference rejects univariate VAR)")
     series = LocalSeries.collect(df, schema)
     dim = 1 + schema.exog.size
-    intervalMs = if (series.n >= 2) series.ts(1) - series.ts(0) else 86400000L
+    intervalMs = series.intervalMs
     val z = zRows(series.y, series.exog)
-    val scores = LocalSeries.foldBounds(series.n, cv, h).map { case (trainEnd, testEnd) =>
+    val scores = CvScores.expanding(series.n, cv, h) { (trainEnd, testEnd) =>
       val (p, b, _, nd) = fitLocal(z.take(trainEnd))
       val pred = forecastLocal(z.take(trainEnd), b, p, testEnd - trainEnd, nd)
       LocalSeries.score(series.y.slice(trainEnd, testEnd), pred)
@@ -145,7 +145,7 @@ class VarModel(maxP: Int = 3, minP: Int = 1, seasonalM: Int = 1,
       val dof = math.max(1, x.rows - x.cols)
       (resid.t * resid) /:/ dof.toDouble
     }
-    CvScores(scores.map(_._1), scores.map(_._2))
+    scores
   }
 
   /** Fitted coefficient matrix ((1 + dim·p + dummies) × dim) and chosen

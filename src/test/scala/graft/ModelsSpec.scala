@@ -878,4 +878,112 @@ class ModelsSpec extends SparkTestBase {
       s"expected only the classifier fitted, got ${at.models.keySet}")
     assert(at.bestModel.isInstanceOf[GbtClassifyTs])
   }
+
+  /** 72 monthly points of trend + sawtooth, the GBT search fixture. */
+  private def sawtooth = {
+    import spark.implicits._
+    (0 until 72).map { t =>
+      val ts = java.sql.Timestamp.valueOf(f"20${20 + t / 12}%d-${t % 12 + 1}%02d-01 00:00:00")
+      (ts, 100.0 + 2.0 * t + 15.0 * (t % 12) + math.sin(t * 1.7) * 3.0)
+    }.toDF("ts", "y")
+  }
+
+  private def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+    d.collect().map(_.mkString("|")).toSeq
+
+  test("AutoTimeseries searchMl honours lag and conf_int in the saved ML model") {
+    import org.json4s._
+    implicit val formats: Formats = DefaultFormats
+    val at = new AutoTimeseries(cv = 1, forecastPeriod = 6, modelTypes = Seq("ML"),
+      searchMl = true, lag = 4, confInt = 0.8)
+    at.fit(sawtooth.limit(48), "ts", "y")
+    val dir = java.nio.file.Files.createTempDirectory("graft-searched").toString
+    at.save(dir)
+    val j = org.json4s.jackson.JsonMethods.parse(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "ML", "params.json")))
+    assert((j \ "lags").extract[Int] == 4)
+    assert((j \ "z").extract[Double] == ForecastFrame.zFor(0.8))
+  }
+
+  test("GbtModel fit: driver-bound result bytes do not grow with the series length") {
+    import spark.implicits._
+    import org.apache.spark.scheduler._
+    // every result task's result is bytes sent to the driver;
+    // the fit's jobs carry this job group (the fold runner's threads
+    // inherit it), so jobs of other suites are not counted
+    val sc = spark.sparkContext
+    val group = "gbt-driver-bound"
+    val tracked = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val drained = new java.util.concurrent.Semaphore(0)
+    @volatile var drainJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => e.stageIds.foreach(tracked.add)
+          case g if g == s"$group-drain" => drainJob = e.jobId
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == drainJob) drained.release()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (tracked.contains(e.stageId) && e.taskType == "ResultTask" && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.resultSize)
+    }
+    def driverBytes(n: Int): Long = {
+      // monthly, so every calendar feature takes all its values at both
+      // lengths and MLlib's split candidates (capped by its bins) match
+      val df = (0 until n).map { t =>
+        (java.sql.Timestamp.from(java.time.LocalDate.of(1940, 1, 1).plusMonths(t.toLong)
+           .atStartOfDay(java.time.ZoneOffset.UTC).toInstant),
+         50.0 + (t % 9) * 3.0 + math.sin(t * 0.3), 10.0 + (t % 5))
+      }.toDF("ts", "y", "x")
+      bytes.set(0)
+      sc.setJobGroup(group, "GbtModel fit")
+      try new GbtModel(lags = 2, maxIter = 5).fit(df, TsSchema("ts", "y", Seq("x")), cv = 2, h = 6)
+      finally sc.clearJobGroup()
+      // the listener bus is FIFO: once a later job's end arrives, every
+      // task end of the fit has been delivered
+      sc.setJobGroup(s"$group-drain", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      bytes.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      val small = driverBytes(60)
+      val large = driverBytes(960)
+      assert(small > 0)
+      assert(large <= small + 1024,
+        s"driver-bound bytes grow with n: $small at n=60, $large at n=960")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fitSearched with no sampled candidates equals the fixed GbtModel fit") {
+    val schema = TsSchema("ts", "y")
+    val fixed = new GbtModel()
+    val s = fixed.fit(sawtooth, schema, 2, 6)
+    val sr = GbtModel.fitSearched(sawtooth, schema, cv = 2, h = 6, nIter = 0)
+    assert(sr.params == GbtModel.GbtParams(2, 50, 0.1))
+    assert(sr.foldRmse == s.foldRmse && sr.foldNormRmse == s.foldNormRmse,
+      s"searched $sr vs fixed $s")
+    assert(rows(sr.model.predict(spark, 6)) == rows(fixed.predict(spark, 6)))
+  }
+
+  test("fitting the same GbtModel twice gives identical scores and forecast") {
+    val schema = TsSchema("ts", "y")
+    val m = new GbtModel(lags = 3)
+    val a = m.fit(sawtooth, schema, 2, 6)
+    val fa = rows(m.predict(spark, 6))
+    val b = m.fit(sawtooth, schema, 2, 6)
+    assert(a == b, s"$a vs $b")
+    assert(rows(m.predict(spark, 6)) == fa)
+  }
+
+  test("a fixed-params GbtModel fit that fails surfaces its own error") {
+    val e = intercept[IllegalArgumentException](
+      new GbtModel(maxDepth = 31).fit(sawtooth, TsSchema("ts", "y"), 2, 6))
+    assert(e.getMessage.contains("maxDepth"), e.getMessage)
+    assert(!e.getMessage.contains("every search candidate"), e.getMessage)
+  }
 }
