@@ -247,10 +247,11 @@ class GbtClassifyTs(lags: Int = 2, maxIter: Int = 30, maxDepth: Int = 4)
     try {
       // the one candidate: this model's depth and iterations, GbtClassify's step
       val (_, scores, fitted) =
-        MlCore.run(frame, n, cv, h, Seq(GbtModel.GbtParams(maxDepth, maxIter, 0.1))) {
-          (p, train, test) =>
+        MlCore.run(n, cv, h, Seq(GbtModel.GbtParams(maxDepth, maxIter, 0.1))) {
+          (p, trainEnd, testEnd) =>
             // the fold's misclassification rate, in both score slots
-            val err = 1.0 - fitOn(p, train).accuracy(test)
+            val err = 1.0 - fitOn(p, MlCore.rows(frame, 0, trainEnd))
+              .accuracy(MlCore.rows(frame, trainEnd, testEnd))
             (err, err)
         }(fitOn(_, frame))
       clf = fitted

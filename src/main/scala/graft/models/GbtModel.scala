@@ -4,10 +4,12 @@ import java.time.{Instant, ZoneOffset}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
 import scala.util.Try
 
 import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.graftbridge.TreeBridge
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,7 +23,10 @@ import GbtModel.GbtParams
   * share, so the GBT fit → score → forecast path exists once:
   *  - (a) one supervised frame per fit ([[frame]]), cached once and read by
   *    every fold fit, every search candidate and the full-frame fit;
-  *  - (b) one fold runner ([[run]]) over (candidate × fold) fits;
+  *  - (b) one fold runner ([[run]]) over (candidate × fold) fits, each a
+  *    caller's Spark job: for [[GbtModel]] one task running [[GbtTrainer]]
+  *    over the frame's rows, for [[GbtClassifyTs]] MLlib's `GBTClassifier`
+  *    over the fold's [[rows]];
   *  - (c) one bounded forecast state ([[State]]) with the recursive
   *    forecast loop and its params.json block. */
 private[models] object MlCore {
@@ -94,10 +99,11 @@ private[models] object MlCore {
     (f, f.count().toInt)
   }
 
-  /** (b) The fold runner: `score(p, train, test)` → (rmse, normalized rmse)
-    * for every candidate on every expanding fold of the n-row frame, all
-    * at once as driver-submitted Spark jobs on a bounded pool (the
-    * scheduler interleaves them, the way the ARIMA grid parallelizes).
+  /** (b) The fold runner: `score(p, trainEnd, testEnd)` → (rmse, normalized
+    * rmse) for every candidate on every expanding fold of the n-row frame
+    * (train on rn ≤ trainEnd, test on trainEnd < rn ≤ testEnd), all at once
+    * as driver-submitted Spark jobs on a bounded pool (the scheduler
+    * interleaves them, the way the ARIMA grid parallelizes).
     *
     * One candidate is the fixed-params model: nothing is searched, so its
     * full-frame fit `full(p)` joins the same batch, and any failure is
@@ -107,17 +113,16 @@ private[models] object MlCore {
     * would bias its mean down); the lowest mean fold RMSE wins (ties by
     * depth, iterations, step) and is then fit on the same frame.
     * Returns the winner, its fold scores and its full-frame fit. */
-  def run[F](frame: DataFrame, n: Int, cv: Int, h: Int, cands: Seq[GbtParams])(
-      score: (GbtParams, DataFrame, DataFrame) => (Double, Double))(
+  def run[F](n: Int, cv: Int, h: Int, cands: Seq[GbtParams])(
+      score: (GbtParams, Int, Int) => (Double, Double))(
       full: GbtParams => F): (GbtParams, CvScores, F) = {
-    val rn = col("rn")
     val folds = LocalSeries.foldBounds(n, cv, h)
     val pool = Executors.newFixedThreadPool(math.min(8, cands.size * folds.size + 1))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
     try {
-      val pairs = for (p <- cands; (trainEnd, testEnd) <- folds) yield p -> Future(Try(
-        score(p, frame.filter(rn <= trainEnd), frame.filter(rn > trainEnd && rn <= testEnd))))
+      val pairs = for (p <- cands; (trainEnd, testEnd) <- folds)
+        yield p -> Future(Try(score(p, trainEnd, testEnd)))
       val fixed = if (cands.size == 1) Some(Future(full(cands.head))) else None
       val scored = pairs.map { case (p, f) => p -> await(f) }
       val (best, scores) =
@@ -134,6 +139,10 @@ private[models] object MlCore {
       (best, CvScores.of(scores), fixed.fold(full(best))(await))
     } finally pool.shutdown()
   }
+
+  /** The frame's rows with from < rn ≤ to. */
+  def rows(frame: DataFrame, from: Int, to: Int): DataFrame =
+    frame.filter(col("rn") > from && col("rn") <= to)
 
   /** (c) The bounded state the recursive forecast reads: the last `lags`
     * label values, the last row's numeric exog, ts and bag-of-words (future
@@ -230,17 +239,24 @@ private[models] object MlCore {
   * label and are dropped from the supervised frame (np.log would emit
   * NaN there — dropping is the honest Spark form).
   *
-  * Spark-native choices: MLlib `GBTRegressor` (distributed training — the
-  * reference's dask-xgboost path collapses into this, SURVEY §2.10 M8);
-  * feature building is window/codegen work; the recursive loop runs on
-  * the driver against the LOCAL `GBTRegressionModel.predict(Vector)` —
-  * h is small, no per-step Spark job.
+  * Spark-native choices: the model is MLlib's `GBTRegressionModel` (the
+  * reference's dask-xgboost path collapses into MLlib's GBT, SURVEY §2.10
+  * M8), trained by [[GbtTrainer]], which reproduces `GBTRegressor` bit for
+  * bit, inside ONE Spark task per fit over the cached one-partition
+  * supervised frame: a fit with cv folds is cv + 1 such jobs instead of
+  * ~100 MLlib jobs per `GBTRegressor.fit` (the bounded series is one
+  * partition either way, so MLlib's distribution bought nothing here).
+  * `newGbt` stays the params holder and validator, and the result is a
+  * real MLlib model, so `predict`, `featureImportances` and the MLlib
+  * writer and reader are unchanged. Feature building is window/codegen
+  * work; the recursive loop runs on the driver against the LOCAL
+  * `GBTRegressionModel.predict(Vector)` — h is small, no per-step Spark
+  * job.
   *
   * DRIVER BOUND of a fit: the forecast state's `lags` + 2 rows, each fold's
-  * test predictions (at most h rows), one residual aggregate row, the NLP
-  * vocabularies (`nlpVocabSize` terms each) and MLlib's per-tree split and
-  * bin statistics (bounded by its bins × features); none grows with the
-  * series length. */
+  * score (two doubles), the full fit's trees (at most maxIter ·
+  * (2^(maxDepth+1) − 1) nodes) and residual σ, and the NLP vocabularies
+  * (`nlpVocabSize` terms each); none grows with the series length. */
 class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
                stepSize: Double = 0.1, logY: Boolean = false,
                nlpVocabSize: Int = 50, z: Double = 1.96) extends ModelBuild {
@@ -252,10 +268,6 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
 
   private def params = GbtParams(maxDepth, maxIter, stepSize)
 
-  /** exp-back-transform for anything the model predicts (identity unless
-    * `logY`) — reference `np.exp(model.predict(...))`, `ml_models.py:187`. */
-  private def back(p: Double): Double = if (logY) math.exp(p) else p
-
   private def newGbt(p: GbtParams) = new GBTRegressor()
     .setLabelCol("y_fit").setFeaturesCol("features")
     .setMaxIter(p.maxIter).setMaxDepth(p.maxDepth).setStepSize(p.stepSize).setSeed(42)
@@ -266,8 +278,10 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
   /** The ML core over `cands`, which share this model's lags, logY,
     * vocabulary size and z: the fit label `y_fit` is the raw target, or its
     * log under `logY` (zeros → 1e-15 first; negatives go null and are
-    * dropped). Returns the fitted winner (this model when its own params
-    * win), its params and its fold scores. */
+    * dropped). Every fold fit and the full-frame fit is one Spark task
+    * running [[GbtTrainer]] ([[GbtModel.inOneTask]]). Returns the fitted
+    * winner (this model when its own params win), its params and its fold
+    * scores. */
   private def fitCandidates(cands: Seq[GbtParams], df: DataFrame, schema: TsSchema,
                             cv: Int, h: Int): (GbtModel, GbtParams, CvScores) = {
     val in = MlCore.inputs(df, schema, lags, s"${schema.target}_lag", nlpVocabSize)
@@ -276,19 +290,38 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
     val (frame, n) = MlCore.frame(df, in, y, Seq(y.as(schema.target), label.as("y_fit")),
                                   assemble = true)
     try {
-      val (best, scores, (fitted, sigma)) = MlCore.run(frame, n, cv, h, cands) { (p, train, test) =>
-        // scored in ORIGINAL units (predictions exp'd back under logY) so
-        // fold RMSEs stay comparable across families and log settings
-        val pred = newGbt(p).fit(train).transform(test)
-          .select(col(schema.target), col("prediction")).collect()
-        LocalSeries.score(pred.map(_.getDouble(0)), pred.map(r => back(r.getDouble(1))))
+      require(n > 0, s"GbtModel: 0 rows to train on: every row of the series lacks one of its " +
+        s"lags = $lags lagged values or has a null; the series needs more than $lags rows")
+      val sup = frame.select(col("features"), col("y_fit"), col(schema.target), col("rn"))
+      val logLabel = logY
+      val (best, scores, (fitted, sigma)) = MlCore.run(n, cv, h, cands) { (p, trainEnd, testEnd) =>
+        val gbt = newGbt(p)
+        val cfg = GbtTrainer.Config.of(gbt)
+        GbtModel.inOneTask(MlCore.rows(sup, 0, testEnd)) { rows =>
+          val (train, test) = rows.partition(_.rn <= trainEnd)
+          val m = GbtModel.model(gbt, GbtModel.train(train, cfg))
+          // scored in ORIGINAL units (predictions exp'd back under logY) so
+          // fold RMSEs stay comparable across families and log settings
+          LocalSeries.score(test.map(_.y), test.map(r => GbtModel.back(logLabel, m.predict(r.x))))
+        }
       } { p =>
-        val m = newGbt(p).fit(frame)
-        // residual σ for the CI columns (reference emits NaN CIs for ML,
-        // `build_ml.py:674-683`; we do better with the in-sample residual std)
-        val predCol = if (logY) exp(col("prediction")) else col("prediction")
-        (m, math.sqrt(m.transform(frame).select(pow(col(schema.target) - predCol, 2))
-              .agg(avg("*")).head().getDouble(0)))
+        val gbt = newGbt(p)
+        val cfg = GbtTrainer.Config.of(gbt)
+        val (ens, sigma) = GbtModel.inOneTask(sup) { rows =>
+          val ens = GbtModel.train(rows, cfg)
+          val m = GbtModel.model(gbt, ens)
+          // residual σ for the CI columns (reference emits NaN CIs for ML,
+          // `build_ml.py:674-683`; we do better with the in-sample residual
+          // std): sqrt(avg(pow(y − prediction, 2))) as Spark evaluates it,
+          // a row-order sum, with Spark's StrictMath exp and pow
+          var sq = 0.0
+          rows.foreach { r =>
+            val p = m.predict(r.x)
+            sq += StrictMath.pow(r.y - (if (logLabel) StrictMath.exp(p) else p), 2)
+          }
+          (ens, math.sqrt(sq / rows.length))
+        }
+        (GbtModel.model(gbt, ens), sigma)
       }
       val winner = if (best == params) this
         else new GbtModel(lags, best.maxIter, best.maxDepth, best.stepSize, logY, nlpVocabSize, z)
@@ -319,7 +352,8 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
 
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame =
     ForecastFrame.build(spark, state.lastTsMs, state.intervalMs,
-      state.forecast(h, future)(f => back(model.predict(Vectors.dense(f)))), residSigma, z)
+      state.forecast(h, future)(f => GbtModel.back(logY, model.predict(Vectors.dense(f)))),
+      residSigma, z)
 
   /** Top-k feature importances of the fitted ensemble — the reference
     * prints the top-10 after the full-data fit (`ml_models.py:160-177`,
@@ -390,6 +424,31 @@ object GbtModel {
 
   case class GbtParams(maxDepth: Int, maxIter: Int, stepSize: Double)
 
+  /** exp-back-transform for anything the model predicts (identity unless
+    * `logY`) — reference `np.exp(model.predict(...))`, `ml_models.py:187`. */
+  private def back(logY: Boolean, p: Double): Double = if (logY) math.exp(p) else p
+
+  /** A supervised row as a fit task reads it: features, fit label, target
+    * and rank in time. */
+  private final case class SupRow(x: Vector, label: Double, y: Double, rn: Int)
+
+  /** `f` over `rows` (features, y_fit, target, rn), in ONE Spark task that
+    * returns only `f`'s result. The cached supervised frame is one
+    * partition (bounded-series contract), so `coalesce(1)` changes
+    * nothing and the rows arrive in time order. */
+  private def inOneTask[T: ClassTag](rows: DataFrame)(f: Array[SupRow] => T): T =
+    rows.rdd.coalesce(1).mapPartitions { it =>
+      Iterator(f(it.map { r =>
+        SupRow(r.getAs[Vector](0), r.getDouble(1), r.getDouble(2), r.getInt(3))
+      }.toArray))
+    }.collect().head
+
+  private def train(rows: Array[SupRow], cfg: GbtTrainer.Config): GbtTrainer.Ensemble =
+    GbtTrainer.fit(rows.map(_.x), rows.map(_.label), cfg)
+
+  private def model(gbt: GBTRegressor, e: GbtTrainer.Ensemble): GBTRegressionModel =
+    TreeBridge.model(gbt, e.trees.toSeq, e.weights, e.numFeatures)
+
   /** Search outcome: the refit winner, its params, and its expanding-
     * window fold scores (rmse, normalized rmse) from the search pass. */
   case class SearchResult(model: GbtModel, params: GbtParams,
@@ -407,8 +466,8 @@ object GbtModel {
     *
     * It is the ML core's fold runner with many candidates: the supervised
     * frame is built and cached ONCE and shared by every (candidate × fold)
-    * fit and the winner's refit — the search cost is pure
-    * `GBTRegressor.fit` calls, each itself a distributed job. */
+    * fit and the winner's refit, each one Spark task running
+    * [[GbtTrainer]]. */
   def fitSearched(df: DataFrame, tsSchema: TsSchema, cv: Int, h: Int,
                   nIter: Int = 15, seed: Long = 42): SearchResult =
     new GbtModel().search(df, tsSchema, cv, h, nIter, seed)

@@ -589,12 +589,11 @@ class ModelsSpec extends SparkTestBase {
     val sr = graft.models.GbtModel.fitSearched(df, schema, cv = 2, h = 6, nIter = 8)
     val (bestP, searchedRmse) = (sr.params, sr.meanRmse)
     val fixedRmse = fixedScores.foldRmse.sum / fixedScores.foldRmse.length
-    // the incumbent default is always candidate zero of the search with
-    // identical folds/seed, so searched can only tie or win — up to a
-    // tiny float tolerance: the search scores on a coalesced single
-    // partition while fit() keeps the default partitioning, and GBT split
-    // statistics accumulate in partition order
-    assert(searchedRmse <= fixedRmse * (1 + 1e-6) + 1e-9,
+    // the incumbent default is always candidate zero of the search, and
+    // both paths fit the same cached frame on the same folds with the same
+    // deterministic trainer, so the search scores the default exactly as
+    // fit() does and can only tie or win
+    assert(searchedRmse <= fixedRmse,
       s"searched=$searchedRmse fixed=$fixedRmse params=$bestP")
   }
 
@@ -905,22 +904,22 @@ class ModelsSpec extends SparkTestBase {
     assert((j \ "z").extract[Double] == ForecastFrame.zFor(0.8))
   }
 
-  test("GbtModel fit: driver-bound result bytes do not grow with the series length") {
-    import spark.implicits._
+  /** The Spark jobs `body` runs under the job group `group`: how many, and
+    * the result bytes their result tasks send to the driver. The fold
+    * runner's threads inherit the group, so jobs of other suites are not
+    * counted. */
+  private def jobsOf(group: String)(body: => Any): (Int, Long) = {
     import org.apache.spark.scheduler._
-    // every result task's result is bytes sent to the driver;
-    // the fit's jobs carry this job group (the fold runner's threads
-    // inherit it), so jobs of other suites are not counted
     val sc = spark.sparkContext
-    val group = "gbt-driver-bound"
     val tracked = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val bytes = new java.util.concurrent.atomic.AtomicLong()
     val drained = new java.util.concurrent.Semaphore(0)
     @volatile var drainJob = -1
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => e.stageIds.foreach(tracked.add)
+          case `group` => jobs.incrementAndGet(); e.stageIds.foreach(tracked.add)
           case g if g == s"$group-drain" => drainJob = e.jobId
           case _ =>
         }
@@ -930,33 +929,49 @@ class ModelsSpec extends SparkTestBase {
         if (tracked.contains(e.stageId) && e.taskType == "ResultTask" && e.taskMetrics != null)
           bytes.addAndGet(e.taskMetrics.resultSize)
     }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // the listener bus is FIFO: once a later job's end arrives, every
+      // job and task event of `body` has been delivered
+      sc.setJobGroup(s"$group-drain", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      (jobs.get, bytes.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("GbtModel fit: driver-bound result bytes do not grow with the series length") {
+    import spark.implicits._
     def driverBytes(n: Int): Long = {
       // monthly, so every calendar feature takes all its values at both
-      // lengths and MLlib's split candidates (capped by its bins) match
+      // lengths and the split candidates (capped by the bins) match
       val df = (0 until n).map { t =>
         (java.sql.Timestamp.from(java.time.LocalDate.of(1940, 1, 1).plusMonths(t.toLong)
            .atStartOfDay(java.time.ZoneOffset.UTC).toInstant),
          50.0 + (t % 9) * 3.0 + math.sin(t * 0.3), 10.0 + (t % 5))
       }.toDF("ts", "y", "x")
-      bytes.set(0)
-      sc.setJobGroup(group, "GbtModel fit")
-      try new GbtModel(lags = 2, maxIter = 5).fit(df, TsSchema("ts", "y", Seq("x")), cv = 2, h = 6)
-      finally sc.clearJobGroup()
-      // the listener bus is FIFO: once a later job's end arrives, every
-      // task end of the fit has been delivered
-      sc.setJobGroup(s"$group-drain", "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      bytes.get
+      jobsOf("gbt-driver-bound")(
+        new GbtModel(lags = 2, maxIter = 5).fit(df, TsSchema("ts", "y", Seq("x")), cv = 2, h = 6))._2
     }
-    sc.addSparkListener(listener)
-    try {
-      val small = driverBytes(60)
-      val large = driverBytes(960)
-      assert(small > 0)
-      assert(large <= small + 1024,
-        s"driver-bound bytes grow with n: $small at n=60, $large at n=960")
-    } finally sc.removeSparkListener(listener)
+    val small = driverBytes(60)
+    val large = driverBytes(960)
+    assert(small > 0)
+    assert(large <= small + 1024,
+      s"driver-bound bytes grow with n: $small at n=60, $large at n=960")
+  }
+
+  test("GbtModel fit: each fold fit and the full fit is one Spark job, a handful in all") {
+    val (jobs, _) = jobsOf("gbt-job-count")(
+      new GbtModel(lags = 2).fit(sawtooth, TsSchema("ts", "y"), cv = 2, h = 6))
+    assert(jobs <= 12, s"$jobs Spark jobs for one fit with cv = 2")
+  }
+
+  test("GbtModel on a series too short for its lags fails with a named error") {
+    val e = intercept[IllegalArgumentException](
+      new GbtModel(lags = 2).fit(sawtooth.limit(2), TsSchema("ts", "y"), 2, 6))
+    assert(e.getMessage.contains("0 rows") && e.getMessage.contains("lags = 2"), e.getMessage)
   }
 
   test("fitSearched with no sampled candidates equals the fixed GbtModel fit") {
