@@ -217,14 +217,11 @@ class AutoTimeseries(cv: Int = 2, forecastPeriod: Int = 8,
   /** S6 — leaderboard sorted by the CONFIGURED score (`score_type`, the
     * same criterion bestName uses — `get_leaderboard().iloc[0]` must be
     * the selected best model), ascending by default
-    * (`get_leaderboard(ascending)`, `__init__.py:1010-1048`). */
-  def leaderboard(spark: SparkSession, ascending: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val key = if (scoreType == "normalized_rmse") "norm_rmse" else "rmse"
-    entries.map(e => (e.name, e.scores.meanRmse, e.scores.meanNormRmse))
-      .toDF("name", "rmse", "norm_rmse")
-      .orderBy(if (ascending) col(key) else col(key).desc)
-  }
+    * (`get_leaderboard(ascending)`, `__init__.py:1010-1048`). Sorted on
+    * the driver into a local relation: collecting it runs no Spark job. */
+  def leaderboard(spark: SparkSession, ascending: Boolean = true): DataFrame =
+    AutoTimeseries.board(spark, entries.map(e => e.name -> e.scores),
+      scoreType == "normalized_rmse", ascending)
 
   /** Per-fold CV scores, exploded (`get_cv_scores`, `__init__.py:1059-1072`). */
   def cvScores(spark: SparkSession): DataFrame = {
@@ -238,7 +235,8 @@ class AutoTimeseries(cv: Int = 2, forecastPeriod: Int = 8,
     * when given, supplies known future exog values (reference
     * `predict(testdata, model)` dispatch, `__init__.py:910-944`; models
     * without exog support ignore it, as the reference's VAR does with a
-    * warning). */
+    * warning). Without `testdata` the forecast, `simple` included, is a
+    * local relation: collecting it runs no Spark job. */
   def predict(spark: SparkSession, h: Int, model: String = "best",
               testdata: Option[DataFrame] = None,
               simple: Boolean = false): DataFrame = {
@@ -279,6 +277,19 @@ class AutoTimeseries(cv: Int = 2, forecastPeriod: Int = 8,
 object AutoTimeseries {
   import org.json4s._
   implicit private val formats: Formats = DefaultFormats
+
+  /** The leaderboard frame (name, rmse, norm_rmse) of `scored`, stably
+    * sorted by mean (normalized) RMSE in Spark's double order
+    * (`SQLOrderingUtil.compareDoubles`: -0.0 equals 0.0, NaN sorts above
+    * +Inf), so ties keep their order in `scored`. */
+  private[graft] def board(spark: SparkSession, scored: Seq[(String, CvScores)],
+                           normalized: Boolean, ascending: Boolean): DataFrame = {
+    import spark.implicits._
+    val rows = scored.map { case (name, s) => (name, s.meanRmse, s.meanNormRmse) }
+    val key: ((String, Double, Double)) => Double = if (normalized) _._3 else _._2
+    val order: Ordering[Double] = (x, y) => if (x == y) 0 else java.lang.Double.compare(x, y)
+    rows.sortBy(key)(if (ascending) order else order.reverse).toDF("name", "rmse", "norm_rmse")
+  }
 
   /** Reload a [[save]]d AutoTimeseries: leaderboard, named getters, and
     * predict all work; predictions are row-identical to pre-save. */

@@ -707,6 +707,7 @@ class ArimaModel(maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
   }
 
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {
+    ForecastFrame.requireHorizon(h)
     val futX = future match {
       case Some(f) if tsSchema != null && tsSchema.exog.nonEmpty =>
         FutureExog.collect(f, tsSchema.tsCol, tsSchema.exog)

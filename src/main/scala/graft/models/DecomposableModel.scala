@@ -262,6 +262,7 @@ class DecomposableModel(seasonalPeriod: Int, fourierOrder: Int = 3,
   }
 
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {
+    ForecastFrame.requireHorizon(h)
     val nScale = series.n.toDouble
     val lastExog = if (series.n > 0 && nExog > 0) series.exog.last else Array.empty[Double]
     // known future exog when supplied (reference add_regressor semantics,
@@ -389,9 +390,23 @@ object DecomposableModel {
   * mean_ci_upper — `build_ml.py:674-683`). Future timestamps step
   * calendar-aware when the observed delta is a month/quarter/year
   * (a fixed-ms step would drift: Jan 1 + 31d = Feb 1, +31d = Mar 4…);
-  * sub-monthly deltas step by the exact observed milliseconds. */
+  * sub-monthly deltas step by the exact observed milliseconds.
+  *
+  * DRIVER BOUND: h rows, computed on the driver and returned as a local
+  * relation, so collecting a forecast (or a `select` over it, which the
+  * optimizer folds into the relation) runs no Spark job. */
 object ForecastFrame {
   private val Day = 86400000L
+
+  val Schema: StructType = StructType(Seq(
+    StructField("ts", TimestampType), StructField("yhat", DoubleType),
+    StructField("mean_se", DoubleType),
+    StructField("mean_ci_lower", DoubleType), StructField("mean_ci_upper", DoubleType)))
+
+  /** Every family's predict checks its horizon first: h = 0 is an empty
+    * forecast, a negative h a named error. */
+  def requireHorizon(h: Int): Unit =
+    require(h >= 0, s"forecast horizon h must be >= 0, got h = $h")
 
   def nextTs(lastMs: Long, intervalMs: Long, step: Int): Long = {
     val base = java.time.Instant.ofEpochMilli(lastMs).atZone(java.time.ZoneOffset.UTC)
@@ -409,17 +424,9 @@ object ForecastFrame {
     * conventional ±1.96σ the oracle twins hash-check. Callers honoring a
     * non-default `conf_int` pass [[zFor]] of their width. */
   def build(spark: SparkSession, lastTsMs: Long, intervalMs: Long,
-            yhat: Array[Double], sigma: Double, z: Double = 1.96): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("yhat", DoubleType),
-      StructField("mean_se", DoubleType),
-      StructField("mean_ci_lower", DoubleType), StructField("mean_ci_upper", DoubleType)))
-    val rows = yhat.zipWithIndex.map { case (p, i) =>
-      Row(new java.sql.Timestamp(nextTs(lastTsMs, intervalMs, i + 1)),
-          p, sigma, p - z * sigma, p + z * sigma)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-  }
+            yhat: Array[Double], sigma: Double, z: Double = 1.96): DataFrame =
+    buildBands(spark, lastTsMs, intervalMs, yhat, yhat.map(_ => sigma),
+      yhat.map(p => p - z * sigma), yhat.map(p => p + z * sigma))
 
   /** Two-sided normal critical value for an interval width. 0.95 maps to
     * the conventional 1.96 (pinned so every recorded golden and twin
@@ -433,14 +440,10 @@ object ForecastFrame {
   def buildBands(spark: SparkSession, lastTsMs: Long, intervalMs: Long,
                  yhat: Array[Double], se: Array[Double],
                  lower: Array[Double], upper: Array[Double]): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("yhat", DoubleType),
-      StructField("mean_se", DoubleType),
-      StructField("mean_ci_lower", DoubleType), StructField("mean_ci_upper", DoubleType)))
-    val rows = yhat.indices.map { i =>
+    val rows = java.util.Arrays.asList(yhat.indices.map { i =>
       Row(new java.sql.Timestamp(nextTs(lastTsMs, intervalMs, i + 1)),
           yhat(i), se(i), lower(i), upper(i))
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    }: _*)
+    spark.createDataFrame(rows, Schema)
   }
 }

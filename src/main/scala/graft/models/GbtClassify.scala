@@ -262,9 +262,11 @@ class GbtClassifyTs(lags: Int = 2, maxIter: Int = 30, maxDepth: Int = 4)
 
   /** The recursive loop over class indices: predict the next class, feed
     * it back as the newest lag. */
-  def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame =
+  def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {
+    ForecastFrame.requireHorizon(h)
     ForecastFrame.build(spark, state.lastTsMs, state.intervalMs,
       state.forecast(h, future)(clf.predictLocal), Double.NaN)
+  }
 
   /** Persist the OVR ensembles + the bounded recursive-loop state. */
   def save(dir: String): Unit = {

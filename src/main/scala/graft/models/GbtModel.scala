@@ -350,10 +350,12 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
     GbtModel.SearchResult(m, p, s.foldRmse, s.foldNormRmse)
   }
 
-  def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame =
+  def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {
+    ForecastFrame.requireHorizon(h)
     ForecastFrame.build(spark, state.lastTsMs, state.intervalMs,
       state.forecast(h, future)(f => GbtModel.back(logY, model.predict(Vectors.dense(f)))),
       residSigma, z)
+  }
 
   /** Top-k feature importances of the fitted ensemble — the reference
     * prints the top-10 after the full-data fit (`ml_models.py:160-177`,

@@ -37,7 +37,13 @@ trait ModelBuild {
   def fit(df: DataFrame, schema: TsSchema, cv: Int, h: Int): CvScores
 
   /** Forecast `h` periods past the end of the training series. Exogenous
-    * future values, when the model uses them, come from `future`. */
+    * future values, when the model uses them, come from `future`. The
+    * forecast is computed on the driver and returned as a local relation
+    * ([[ForecastFrame]]), so predict and a collect of its result run no
+    * Spark job unless `future` is given: that frame is the caller's and
+    * is collected once ([[FutureExog.collect]], bounded by h). h = 0
+    * returns an empty frame; a negative h fails with an
+    * `IllegalArgumentException` naming h. */
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame
 
   /** Persist the FITTED state to `dir` so predict survives the session

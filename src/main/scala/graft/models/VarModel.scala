@@ -210,6 +210,7 @@ class VarModel(maxP: Int = 3, minP: Int = 1, seasonalM: Int = 1,
   }
 
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {
+    ForecastFrame.requireHorizon(h)
     val hist = zRows(series.y, series.exog)
     val pred = forecastLocal(hist, coefs, bestP, h, fittedDummies)
     ForecastFrame.build(spark, series.ts.last, intervalMs, pred, sigmaTarget, z)

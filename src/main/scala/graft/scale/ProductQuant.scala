@@ -133,9 +133,7 @@ object ProductQuant {
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank").cast("long").as("rank"),
               col("vid"), col("adist"))
-    val rows = result.collect().toSeq
-    v.unpersist()
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), result.schema)
+    Similarity.localized(result, { v.unpersist(); () })
   }
 
   /** IVF+PQ — the composed big-corpus ANN layout (IVFADC in Jégou et
@@ -195,8 +193,6 @@ object ProductQuant {
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank").cast("long").as("rank"),
               col("vid"), col("adist"))
-    val rows = result.collect().toSeq
-    v.unpersist()
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), result.schema)
+    Similarity.localized(result, { v.unpersist(); () })
   }
 }

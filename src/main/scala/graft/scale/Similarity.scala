@@ -444,13 +444,13 @@ object Similarity {
     localized(result, { v.unpersist(); assigned.unpersist(); () })
   }
 
-  /** Collect a BOUNDED result and rebuild it as a local DataFrame so the
-    * caches its lineage depended on can be released immediately. */
-  private def localized(df: DataFrame, release: => Unit): DataFrame = {
-    val rows = df.collect().toSeq
+  /** Collect a BOUNDED result (one job) and rebuild it as a local
+    * relation, so the caches its lineage depended on can be released
+    * immediately and collecting the returned frame runs no second job. */
+  private[scale] def localized(df: DataFrame, release: => Unit): DataFrame = {
+    val rows = df.collect()
     release
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(rows, 1), df.schema)
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
   /** ANN top-k: exact ranking restricted to the query's LSH bucket

@@ -1001,4 +1001,155 @@ class ModelsSpec extends SparkTestBase {
     assert(e.getMessage.contains("maxDepth"), e.getMessage)
     assert(!e.getMessage.contains("every search candidate"), e.getMessage)
   }
+
+  /** 48 monthly points of trend + season with one exog column. */
+  private def exogSeries = {
+    import spark.implicits._
+    (0 until 48).map { t =>
+      (java.sql.Timestamp.from(
+         java.time.LocalDate.of(2015, 1, 1).plusMonths(t.toLong)
+           .atStartOfDay(java.time.ZoneOffset.UTC).toInstant),
+       100.0 + 2.0 * t + 10.0 * math.sin(t * math.Pi / 6) + (t % 5) * 0.7,
+       50.0 + (t % 7).toDouble)
+    }.toDF("ts", "y", "x")
+  }
+
+  /** Every family fitted once: on [[exogSeries]], the classifier on a
+    * monthly season label. */
+  private lazy val fitted: Map[String, ModelBuild] = {
+    import spark.implicits._
+    val regressors = Seq(
+      "GbtModel" -> new GbtModel(lags = 2),
+      "SearchedGbtModel" -> new SearchedGbtModel(lags = 2),
+      "ArimaModel" -> new ArimaModel(maxP = 1, maxD = 1, maxQ = 1),
+      "VarModel" -> new VarModel(seasonalM = 12),
+      "DecomposableModel" -> new DecomposableModel(seasonalPeriod = 12),
+      "DecomposableModel bootstrap" -> new DecomposableModel(seasonalPeriod = 12,
+        intervalMode = "bootstrap", uncertaintySamples = 50))
+    regressors.foreach(_._2.fit(exogSeries, TsSchema("ts", "y", Seq("x")), cv = 1, h = 4))
+    val seasons = Array("winter", "spring", "spring", "summer", "autumn", "winter")
+    val labels = (0 until 48).map { t =>
+      (java.sql.Timestamp.from(java.time.LocalDate.of(2015, 1, 1).plusMonths(t.toLong)
+         .atStartOfDay(java.time.ZoneOffset.UTC).toInstant), seasons(t / 2 % 6))
+    }.toDF("ts", "season")
+    val clf = new GbtClassifyTs(lags = 2, maxIter = 5)
+    clf.fit(labels, TsSchema("ts", "season"), cv = 1, h = 4)
+    (regressors :+ ("GbtClassifyTs" -> clf)).toMap
+  }
+
+  Seq("GbtModel", "GbtClassifyTs", "ArimaModel", "VarModel", "DecomposableModel").foreach { tag =>
+    test(s"$tag predict: a negative horizon fails with a named error, h = 0 is an empty sink frame") {
+      val e = intercept[IllegalArgumentException](fitted(tag).predict(spark, -1))
+      assert(e.getMessage.contains("forecast horizon") && e.getMessage.contains("h = -1"),
+        e.getMessage)
+      val empty = fitted(tag).predict(spark, 0)
+      assert(empty.schema == ForecastFrame.Schema)
+      assert(empty.collect().isEmpty)
+    }
+  }
+
+  test("predict(...).collect() runs no Spark job on any fitted family") {
+    fitted.foreach { case (tag, m) =>
+      val (jobs, _) = jobsOf(s"predict-jobs-$tag")(assert(m.predict(spark, 6).collect().length == 6))
+      assert(jobs == 0, s"$tag: $jobs Spark jobs for predict(6).collect()")
+    }
+  }
+
+  test("AutoTimeseries predict (best, named, simple, reloaded) and leaderboard run no Spark job") {
+    val at = new AutoTimeseries(cv = 1, forecastPeriod = 6, modelTypes = Seq("ML", "VAR"))
+    at.fit(exogSeries, "ts", "y")
+    val other = at.models.keySet.find(_ != at.bestName).get
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve").toString
+    at.save(dir)
+    val loaded = AutoTimeseries.load(dir)
+    val calls: Seq[(String, () => Array[org.apache.spark.sql.Row])] = Seq(
+      "best" -> (() => at.predict(spark, 6).collect()),
+      "named" -> (() => at.predict(spark, 6, model = other).collect()),
+      "simple" -> (() => at.predict(spark, 6, simple = true).collect()),
+      "loaded" -> (() => loaded.predict(spark, 6).collect()),
+      "leaderboard" -> (() => at.leaderboard(spark).collect()),
+      "loaded leaderboard" -> (() => loaded.leaderboard(spark, ascending = false).collect()))
+    calls.foreach { case (tag, call) =>
+      val (jobs, _) = jobsOf(s"automl-jobs-$tag")(assert(call().nonEmpty))
+      assert(jobs == 0, s"$tag: $jobs Spark jobs")
+    }
+    assert(at.predict(spark, 6, simple = true).columns.toSeq == Seq("ts", "yhat"))
+    assert(rows(loaded.predict(spark, 6)) == rows(at.predict(spark, 6)))
+  }
+
+  test("ForecastFrame frames equal the parallelize-built frames in schema and rows") {
+    import spark.implicits._
+    // the frames as they were built before, on a one-partition RDD
+    def viaRdd(lastTsMs: Long, intervalMs: Long, yhat: Array[Double], se: Array[Double],
+               lo: Array[Double], hi: Array[Double]) = {
+      val rows = yhat.indices.map { i =>
+        org.apache.spark.sql.Row(
+          new java.sql.Timestamp(ForecastFrame.nextTs(lastTsMs, intervalMs, i + 1)),
+          yhat(i), se(i), lo(i), hi(i))
+      }
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ForecastFrame.Schema)
+    }
+    def render(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("ts").cast("long"), date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSS"),
+        col("yhat"), col("mean_se"), col("mean_ci_lower"), col("mean_ci_upper")).collect().toSeq
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.schema == b.schema, s"${a.schema} vs ${b.schema}")
+      assert(a.schema.map(_.nullable) == b.schema.map(_.nullable))
+      val (ra, rb) = (a.collect().toSeq, b.collect().toSeq)
+      assert(ra == rb, s"$ra vs $rb")
+      assert(ra.map(_.getTimestamp(0).getTime) == rb.map(_.getTimestamp(0).getTime))
+      for (zone <- Seq("UTC", "America/Los_Angeles", "Asia/Kolkata")) {
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        try assert(render(a) == render(b), zone) finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+      }
+    }
+    val yhat = Array(1.5, -2.25, 1e300, Double.NaN, 0.1 + 0.2, -0.0, 7.0)
+    val monthEnd = java.time.Instant.parse("2019-01-31T00:00:00Z").toEpochMilli
+    val dstEve = java.time.Instant.parse("2021-03-13T09:30:00.123Z").toEpochMilli
+    for ((last, step) <- Seq(monthEnd -> 31L * 86400000L, dstEve -> 3600000L,
+                             dstEve -> 86400000L, monthEnd -> 366L * 86400000L)) {
+      for ((sigma, z) <- Seq(2.5 -> 1.96, Double.NaN -> 1.96, 0.75 -> ForecastFrame.zFor(0.8)))
+        same(ForecastFrame.build(spark, last, step, yhat, sigma, z),
+          viaRdd(last, step, yhat, yhat.map(_ => sigma),
+            yhat.map(p => p - z * sigma), yhat.map(p => p + z * sigma)))
+      val se = yhat.indices.map(i => 0.5 * i).toArray
+      val lo = yhat.map(_ - 3.0)
+      val hi = yhat.map(_ + 4.0)
+      same(ForecastFrame.buildBands(spark, last, step, yhat, se, lo, hi),
+        viaRdd(last, step, yhat, se, lo, hi))
+    }
+    same(ForecastFrame.build(spark, monthEnd, 86400000L, Array.empty, 1.0),
+      viaRdd(monthEnd, 86400000L, Array.empty, Array.empty, Array.empty, Array.empty))
+  }
+
+  test("leaderboard sorts in Spark's order: NaN largest, +Inf before it, ties in entry order") {
+    import spark.implicits._
+    val nan = Double.NaN
+    val scored = Seq(
+      "a" -> CvScores(Seq(3.0), Seq(0.3)),
+      "b" -> CvScores(Seq(nan), Seq(0.1)),
+      "c" -> CvScores(Nil, Nil), // no folds: +Inf in both slots
+      "d" -> CvScores(Seq(1.0, 5.0), Seq(0.5, nan)),
+      "e" -> CvScores(Seq(-0.0), Seq(0.0)),
+      "f" -> CvScores(Seq(0.0), Seq(-0.0)),
+      "g" -> CvScores(Seq(nan), Seq(0.2)))
+    val expected = Map(
+      (false, true) -> "efadcbg", (false, false) -> "bgcadef",
+      (true, true) -> "efbgacd", (true, false) -> "dcagbef")
+    // Spark's own sort of the same rows, with the entry index as tie-break
+    val oracle = scored.zipWithIndex
+      .map { case ((n, s), i) => (n, s.meanRmse, s.meanNormRmse, i) }
+      .toDF("name", "rmse", "norm_rmse", "i")
+    for (normalized <- Seq(false, true); ascending <- Seq(true, false)) {
+      val key = col(if (normalized) "norm_rmse" else "rmse")
+      val want = oracle.orderBy(if (ascending) key else key.desc, col("i"))
+        .drop("i").collect().toSeq
+      val board = AutoTimeseries.board(spark, scored, normalized, ascending)
+      val (jobs, _) = jobsOf(s"board-$normalized-$ascending")(
+        assert(board.collect().toSeq == want, s"normalized $normalized, ascending $ascending"))
+      assert(jobs == 0, s"$jobs Spark jobs for a leaderboard collect")
+      assert(board.collect().map(_.getString(0)).mkString == expected((normalized, ascending)))
+      assert(board.schema == oracle.drop("i").schema)
+    }
+  }
 }
