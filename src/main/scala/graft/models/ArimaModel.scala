@@ -1,8 +1,12 @@
 package graft.models
 
-import breeze.linalg.{DenseMatrix, DenseVector}
-import breeze.optimize.{ApproximateGradientFunction, DiffFunction, LBFGS}
+import breeze.linalg.{DenseMatrix, DenseVector, norm}
+import breeze.math.MutableInnerProductModule
+import breeze.optimize.{ApproximateGradientFunction, DiffFunction, LBFGS, LineSearch,
+  StepSizeUnderflow, StrongWolfeLineSearch}
+import breeze.util.LazyLogger
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.slf4j.helpers.NOPLogger
 
 /** M1–M3 — ARIMA(p,d,q)(P,D,Q)m by conditional sum of squares (CSS) +
   * two-stage grid search.
@@ -16,11 +20,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * seasonal and cross lags, the cross coefficients CONSTRAINED to the
   * products φ_i·Φ_I of the p+P (resp. q+Q) free parameters, the same
   * parameterization statsmodels SARIMAX estimates (CSS rather than
-  * state-space likelihood) — minimized with L-BFGS (Breeze). Each grid stage runs as a
-  * Spark job over the broadcast series, one task per cell (SURVEY §4:
-  * the parallel-estimator scheduler), which is how the search scales on a
-  * cluster. */
+  * state-space likelihood) — minimized with L-BFGS (Breeze). A search's
+  * cells are independent fits, run as ONE Spark job ([[fanOut]]: the cells
+  * dealt over at most `defaultParallelism` tasks, results in cell order),
+  * which is how the search scales on a cluster; a caller with several
+  * searches over the same series (`ArimaModel.fit`'s CV folds and its
+  * full-series search) runs all their cells in that one job
+  * ([[runSearches]]). */
 object ArimaCss {
+
+  /** Breeze's `LBFGS(maxIter = 200, m = 7)` with its logging off, for the
+    * ARIMA fitters: a cell whose CSS objective goes non-finite makes the
+    * line search and the minimizer log an ERROR per failed step (about
+    * 1,460 lines per AutoML lifecycle), although the cell's failure is the
+    * expected outcome and [[fitCell]] drops it. `determineStepSize` is
+    * Breeze's own (`StrongWolfeLineSearch(10, 10)`, first step 1/‖dir‖,
+    * underflow below 1e-10), with the line search's logger off too, so
+    * every fit is unchanged. */
+  private final class QuietLbfgs(implicit space: MutableInnerProductModule[DenseVector[Double], Double])
+      extends LBFGS[DenseVector[Double]](200, 7) {
+    override protected def logger: LazyLogger = Quiet
+
+    override protected def determineStepSize(state: State, f: DiffFunction[DenseVector[Double]],
+                                             dir: DenseVector[Double]): Double = {
+      val ff = LineSearch.functionFromSearchDirection(f, state.x, dir)
+      val search = new StrongWolfeLineSearch(maxZoomIter = 10, maxLineSearchIter = 10) {
+        override protected def logger: LazyLogger = Quiet
+      }
+      val alpha = search.minimize(ff, if (state.iter == 0.0) 1.0 / norm(dir)(space.normImpl) else 1.0)
+      if (alpha * norm(state.grad)(space.normImpl) < 1e-10) throw new StepSizeUnderflow
+      alpha
+    }
+  }
+
+  private val Quiet = new LazyLogger(NOPLogger.NOP_LOGGER)
 
   /** Order spec. arLags/maLags are the lags of the EXPANDED multiplicative
     * polynomial (1−Σφᵢᵢ)(1−ΣΦᵢᵐ): regular lags 1..p, seasonal lags m..Pm,
@@ -197,8 +230,7 @@ object ArimaCss {
     }
     val init = DenseVector.zeros[Double](1 + p + sP + q + sQ)
     init(0) = w.sum / n
-    val lbfgs = new LBFGS[DenseVector[Double]](maxIter = 200, m = 7)
-    val xOpt = lbfgs.minimize(obj, init)
+    val xOpt = new QuietLbfgs().minimize(obj, init)
     val (c, phiR, phiS, thR, thS) = split(xOpt)
     val phi = expandAligned(arLags, phiR, phiS, m, -1.0)
     val theta = expandAligned(maLags, thR, thS, m, +1.0)
@@ -241,8 +273,7 @@ object ArimaCss {
     }
     val init = DenseVector.zeros[Double](1 + np + nq)
     init(0) = w.sum / n // start intercept at the mean
-    val lbfgs = new LBFGS[DenseVector[Double]](maxIter = 200, m = 7)
-    val xOpt = lbfgs.minimize(obj, init)
+    val xOpt = new QuietLbfgs().minimize(obj, init)
     val c = xOpt(0)
     val phi = Array.tabulate(np)(i => xOpt(1 + i))
     val theta = Array.tabulate(nq)(j => xOpt(1 + np + j))
@@ -251,7 +282,7 @@ object ArimaCss {
     // noise and sigma2 (hence AIC) is spuriously small — on pure white
     // noise an unconstrained (2,0,2) beats (0,0,0) by ~17 AIC with
     // |theta| > 1. statsmodels/pmdarima reject such fits; so do we: the
-    // cell is discarded (parallelFit drops it) and the search keeps the
+    // cell is discarded (fitCell drops it) and the search keeps the
     // invertible candidates.
     invertibilityGate(maLags, theta, spec)
     val e = cssResiduals(w, c, arLags, phi, maLags, theta)
@@ -337,8 +368,7 @@ object ArimaCss {
     init(0) = ols.c
     var bi = 0
     while (bi < k) { init(1 + bi) = ols.beta(bi); bi += 1 }
-    val lbfgs = new LBFGS[DenseVector[Double]](maxIter = 200, m = 7)
-    val xOpt = lbfgs.minimize(obj, init)
+    val xOpt = new QuietLbfgs().minimize(obj, init)
     val (c, beta, phiR, phiS, thR, thS) = split(xOpt)
     val phi = expandAligned(arLags, phiR, phiS, m, -1.0)
     val theta = expandAligned(maLags, thR, thS, m, +1.0)
@@ -350,29 +380,68 @@ object ArimaCss {
     Fit(spec, phi, theta, c, sigma2, aic, ne, beta)
   }
 
-  private def parallelFit(spark: SparkSession, y: Array[Double],
-                          grid: Seq[Spec],
-                          xs: Array[Array[Double]] = Array.empty): Seq[Fit] = {
-    val bc = spark.sparkContext.broadcast(y)
-    val bcX = spark.sparkContext.broadcast(xs)
-    val fits = spark.sparkContext
-      .parallelize(grid, math.max(grid.size, 1))
-      .map { spec =>
-        try Some(fitOneX(bc.value, bcX.value, spec))
-        catch { case _: Throwable => None }
+  /** One cell of a search: `spec` fitted on (y, xs). With a holdout
+    * (`valY` non-empty) the fit's forecast over (valY, valX) is scored by
+    * RMSE; without one `rmse` is NaN. */
+  private[graft] final case class Cell(y: Array[Double], xs: Array[Array[Double]], spec: Spec,
+                                        valY: Array[Double] = Array.empty,
+                                        valX: Array[Array[Double]] = Array.empty)
+
+  /** A cell's fit and its holdout RMSE. */
+  private[graft] final case class Scored(fit: Fit, rmse: Double)
+
+  /** A cell's outcome: None when the fit fails (too short, non-invertible,
+    * no convergence) or its holdout RMSE is not finite. */
+  private def fitCell(c: Cell): Option[Scored] =
+    try {
+      val f = fitOneX(c.y, c.xs, c.spec)
+      if (c.valY.isEmpty) Some(Scored(f, Double.NaN))
+      else {
+        val pred = forecastX(c.y, c.xs, f, c.valY.length, c.valX)
+        val rmse = math.sqrt(pred.zip(c.valY)
+          .map { case (a, b) => (a - b) * (a - b) }.sum / pred.length)
+        if (rmse.isNaN || rmse.isInfinite) None else Some(Scored(f, rmse))
       }
-      .collect().flatten.toSeq
-    bc.destroy(); bcX.destroy()
-    fits
+    } catch { case _: Throwable => None }
+
+  /** `f` over independent `cells` as ONE Spark job (SURVEY §4: the
+    * parallel-estimator scheduler): the cells are dealt round-robin over at
+    * most `defaultParallelism` tasks, so a grid sorted by cost spreads its
+    * dear cells evenly, and the results come back in cell order. No cells,
+    * no job. */
+  private[graft] def fanOut[A, B](spark: SparkSession, cells: Seq[A])(f: A => B): Seq[B] = {
+    val sc = spark.sparkContext
+    val k = math.min(cells.size, sc.defaultParallelism)
+    if (k == 0) return Seq.empty
+    val dealt = Seq.tabulate(k)(t => (t until cells.size by k).map(i => i -> cells(i)))
+    sc.parallelize(dealt, k)
+      .map(_.map { case (i, c) => (i, f(c)) })
+      .collect().toSeq.flatten.sortBy(_._1).map(_._2)
   }
 
-  /** Non-seasonal grid search (one Spark job, min-AIC, 100-fit budget like
-    * `param_finder.py:94-99`). Non-empty `xs` makes every cell an ARIMAX
-    * regression-with-ARMA-errors fit. */
-  def gridSearch(spark: SparkSession, y: Array[Double],
-                 maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
-                 budget: Int = 100,
-                 xs: Array[Array[Double]] = Array.empty): Fit = {
+  /** Every cell's outcome, in cell order, from one [[fanOut]] job. */
+  private def fitCells(spark: SparkSession, cells: Seq[Cell]): Seq[Option[Scored]] =
+    fanOut(spark, cells)(fitCell)
+
+  /** A search as its cells and the selection over their outcomes (in cell
+    * order), so several searches run their cells as one job
+    * ([[runSearches]]). */
+  private[graft] final case class Search(cells: Seq[Cell], select: Seq[Option[Scored]] => Fit)
+
+  /** The cells of all `searches` as ONE Spark job, then each search's
+    * selection, in order. */
+  private[graft] def runSearches(spark: SparkSession, searches: Seq[Search]): Seq[Fit] = {
+    val out = fitCells(spark, searches.flatMap(_.cells))
+    val offsets = searches.scanLeft(0)(_ + _.cells.size)
+    searches.zip(offsets).map { case (s, from) => s.select(out.slice(from, from + s.cells.size)) }
+  }
+
+  /** Non-seasonal grid search (min-AIC, first cell in grid order on a tie,
+    * 100-fit budget like `param_finder.py:94-99`). Non-empty `xs` makes
+    * every cell an ARIMAX regression-with-ARMA-errors fit. */
+  private[graft] def gridPlan(y: Array[Double], maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
+                               budget: Int = 100,
+                               xs: Array[Array[Double]] = Array.empty): Search = {
     // the (0,d,0) intercept-only cell is a legal candidate (the reference
     // grids p,q from 0, `build_arima.py:77-112`): on white-noise-after-
     // differencing series it should win rather than force a spurious term
@@ -380,10 +449,19 @@ object ArimaCss {
       p <- 0 to maxP; d <- 0 to maxD; q <- 0 to maxQ
       if y.length - d > p + q + 8
     } yield Spec(p, d, q)).take(budget)
-    val fits = parallelFit(spark, y, grid, xs)
-    require(fits.nonEmpty, "no ARIMA cell converged")
-    fits.minBy(_.aic)
+    Search(grid.map(Cell(y, xs, _)), { out =>
+      val fits = out.flatten.map(_.fit)
+      require(fits.nonEmpty, "no ARIMA cell converged")
+      fits.minBy(_.aic)
+    })
   }
+
+  /** [[gridPlan]] as one Spark job. */
+  def gridSearch(spark: SparkSession, y: Array[Double],
+                 maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
+                 budget: Int = 100,
+                 xs: Array[Array[Double]] = Array.empty): Fit =
+    runSearches(spark, Seq(gridPlan(y, maxP, maxD, maxQ, budget, xs))).head
 
   private def stddev(x: Array[Double]): Double = {
     val mu = x.sum / x.length
@@ -392,21 +470,23 @@ object ArimaCss {
 
   /** Seasonal order search. D ∈ {0,1} comes from seasonal strength
     * (variance ratio of the lag-m difference — the OCSB-test stand-in in
-    * auto-arima, `build_autoarimax.py:16-88`); then ONE parallel Spark
-    * job fits the joint (p,d,q,P,Q) grid, each task scoring its cell by
-    * h-step RMSE on the held-out TAIL of the series. Selection by
-    * held-out forecast error (AICc as tie-break) rather than raw AIC:
-    * AIC values are incomparable across differencing levels (different
-    * ne) and overfit badly on reference-sized samples, whereas tail RMSE
-    * is the quantity the AutoML is actually judged on. The winner is
-    * refit on the full series. */
-  def gridSearchSeasonal(spark: SparkSession, y: Array[Double], m: Int,
-                         maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
-                         budget: Int = 100, holdout: Int = 8,
-                         xs: Array[Array[Double]] = Array.empty): Fit = {
+    * auto-arima, `build_autoarimax.py:16-88`); then the joint (p,d,q,P,Q)
+    * grid is fitted, each cell scored by h-step RMSE on the held-out TAIL
+    * of the series. Selection by held-out forecast error (AIC as
+    * tie-break, then grid order) rather than raw AIC: AIC values are
+    * incomparable across differencing levels (different ne) and overfit
+    * badly on reference-sized samples, whereas tail RMSE is the quantity
+    * the AutoML is actually judged on. The winner is refit on the full
+    * series on the driver. A series too short for a season, a grid where
+    * no cell scores, or a winner whose refit fails falls back to
+    * [[gridSearch]] (a job of its own). */
+  private[graft] def seasonalPlan(spark: SparkSession, y: Array[Double], m: Int,
+                                   maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
+                                   budget: Int = 100, holdout: Int = 8,
+                                   xs: Array[Array[Double]] = Array.empty): Search = {
     // need at least one full season beyond the seasonal difference;
     // individually infeasible cells are rejected inside fitOne
-    if (m <= 1 || y.length < 2 * m + 4) return gridSearch(spark, y, maxP, maxD, maxQ, budget, xs)
+    if (m <= 1 || y.length < 2 * m + 4) return gridPlan(y, maxP, maxD, maxQ, budget, xs)
     val sD = if (stddev(diff1(y, m)) < 0.9 * stddev(y)) 1 else 0
     val h = math.min(holdout, y.length / 5)
     val train = y.dropRight(h)
@@ -419,29 +499,23 @@ object ArimaCss {
       sP <- 0 to 1; sQ <- 0 to 1
     } yield Spec(p, d, q, sP, sD, sQ, m))
       .sortBy(_.nParams).take(budget)
-    val bcTrain = spark.sparkContext.broadcast(train)
-    val bcVal = spark.sparkContext.broadcast(value)
-    val bcTrainX = spark.sparkContext.broadcast(trainX)
-    val bcValX = spark.sparkContext.broadcast(valX)
-    val scored = spark.sparkContext
-      .parallelize(grid, math.max(grid.size, 1))
-      .map { spec =>
-        try {
-          val f = fitOneX(bcTrain.value, bcTrainX.value, spec)
-          val pred = forecastX(bcTrain.value, bcTrainX.value, f,
-            bcVal.value.length, bcValX.value)
-          val rmse = math.sqrt(pred.zip(bcVal.value)
-            .map { case (a, b) => (a - b) * (a - b) }.sum / pred.length)
-          if (rmse.isNaN || rmse.isInfinite) None else Some((spec, rmse, f.aic))
-        } catch { case _: Throwable => None }
+    def fallback = gridSearch(spark, y, maxP, maxD, maxQ, budget, xs)
+    Search(grid.map(Cell(train, trainX, _, value, valX)), { out =>
+      val scored = out.flatten
+      if (scored.isEmpty) fallback
+      else {
+        val bestSpec = scored.minBy(s => (s.rmse, s.fit.aic)).fit.spec
+        scala.util.Try(fitOneX(y, xs, bestSpec)).getOrElse(fallback)
       }
-      .collect().flatten.toSeq
-    bcTrain.destroy(); bcVal.destroy(); bcTrainX.destroy(); bcValX.destroy()
-    if (scored.isEmpty) return gridSearch(spark, y, maxP, maxD, maxQ, budget, xs)
-    val bestSpec = scored.minBy { case (_, rmse, aic) => (rmse, aic) }._1
-    scala.util.Try(fitOneX(y, xs, bestSpec)).getOrElse(
-      gridSearch(spark, y, maxP, maxD, maxQ, budget, xs))
+    })
   }
+
+  /** [[seasonalPlan]] as one Spark job. */
+  def gridSearchSeasonal(spark: SparkSession, y: Array[Double], m: Int,
+                         maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
+                         budget: Int = 100, holdout: Int = 8,
+                         xs: Array[Array[Double]] = Array.empty): Fit =
+    runSearches(spark, Seq(seasonalPlan(spark, y, m, maxP, maxD, maxQ, budget, holdout, xs))).head
 
   /** Lag-polynomial coefficient vector (index = lag − 1) from subset
     * lags + their fitted coefficients. */
@@ -520,8 +594,8 @@ object ArimaCss {
     * residuals over a SHARED burn-in window ([[aiccAt]]) so every
     * comparison is exactly equal-n. The search then starts from the four
     * canonical seeds and hill-climbs over ±1 neighbors in (p, q, sP,
-    * sQ); each round's unseen neighbors are fitted as ONE parallel Spark
-    * job. Typically converges in 3-6 rounds ≈ 20-40 fits vs the 100-fit
+    * sQ); each round's unseen neighbors are fitted as ONE Spark job
+    * ([[fanOut]]). Typically converges in 3-6 rounds ≈ 20-40 fits vs the 100-fit
     * full grid, and wall-clock on a cluster is O(rounds · slowest fit),
     * not O(grid). */
   def stepwiseSearch(spark: SparkSession, y: Array[Double], m: Int = 1,
@@ -562,7 +636,7 @@ object ArimaCss {
     def fitBatch(specs: Seq[Spec]): Unit = {
       val todo = specs.distinct.filter(s => feasible(s) && !attempted(s))
       attempted ++= todo
-      if (todo.nonEmpty) parallelFit(spark, y, todo, xs).foreach(f => fits(f.spec) = f)
+      fitCells(spark, todo.map(Cell(y, xs, _))).flatten.foreach(o => fits(o.fit.spec) = o.fit)
     }
     fitBatch(seeds)
     require(fits.nonEmpty, "no stepwise seed converged")
@@ -675,9 +749,9 @@ class ArimaModel(maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
     if (tsSchema != null && tsSchema.exog.nonEmpty) series.exog else Array.empty
 
   private def search(spark: SparkSession, y: Array[Double],
-                     xs: Array[Array[Double]]): ArimaCss.Fit =
-    if (seasonalM > 1) ArimaCss.gridSearchSeasonal(spark, y, seasonalM, maxP, maxD, maxQ, xs = xs)
-    else ArimaCss.gridSearch(spark, y, maxP, maxD, maxQ, xs = xs)
+                     xs: Array[Array[Double]]): ArimaCss.Search =
+    if (seasonalM > 1) ArimaCss.seasonalPlan(spark, y, seasonalM, maxP, maxD, maxQ, xs = xs)
+    else ArimaCss.gridPlan(y, maxP, maxD, maxQ, xs = xs)
 
   /** Numeric exog columns become ARIMAX regressors (regression with SARIMA
     * errors — the `exog=data[self.original_preds]` path of
@@ -694,16 +768,17 @@ class ArimaModel(maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
     intervalMs = series.intervalMs
     val spark = df.sparkSession
     val xs = xsAll
-    val scores = CvScores.expanding(series.n, cv, h) { (trainEnd, testEnd) =>
-      val train = series.y.take(trainEnd)
-      val trainX = if (xs.isEmpty) xs else xs.take(trainEnd)
-      val f = search(spark, train, trainX)
-      val futX = if (xs.isEmpty) xs else xs.slice(trainEnd, testEnd)
-      val pred = ArimaCss.forecastX(train, trainX, f, testEnd - trainEnd, futX)
+    val folds = LocalSeries.foldBounds(series.n, cv, h)
+    // every fold's search and the full-series search: one Spark job
+    val fits = ArimaCss.runSearches(spark,
+      folds.map { case (trainEnd, _) => search(spark, series.y.take(trainEnd), xs.take(trainEnd)) } :+
+        search(spark, series.y, xs))
+    best = fits.last
+    CvScores.of(folds.zip(fits).map { case ((trainEnd, testEnd), f) =>
+      val pred = ArimaCss.forecastX(series.y.take(trainEnd), xs.take(trainEnd), f,
+        testEnd - trainEnd, xs.slice(trainEnd, testEnd))
       LocalSeries.score(series.y.slice(trainEnd, testEnd), pred)
-    }
-    best = search(spark, series.y, xs)
-    scores
+    })
   }
 
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame = {

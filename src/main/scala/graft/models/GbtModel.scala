@@ -1,5 +1,6 @@
 package graft.models
 
+import java.nio.file.{Files, Paths}
 import java.time.{Instant, ZoneOffset}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -247,8 +248,10 @@ private[models] object MlCore {
   * ~100 MLlib jobs per `GBTRegressor.fit` (the bounded series is one
   * partition either way, so MLlib's distribution bought nothing here).
   * `newGbt` stays the params holder and validator, and the result is a
-  * real MLlib model, so `predict`, `featureImportances` and the MLlib
-  * writer and reader are unchanged. Feature building is window/codegen
+  * real MLlib model, so `predict` and `featureImportances` are unchanged.
+  * Save and load run no Spark job: the trees are stored in a compact file
+  * beside params.json ([[GbtTrainer.Ensemble]]) and rebuilt on load, not
+  * passed through MLlib's writer and reader. Feature building is window/codegen
   * work; the recursive loop runs on the driver against the LOCAL
   * `GBTRegressionModel.predict(Vector)` — h is small, no per-step Spark
   * job.
@@ -262,11 +265,22 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
                nlpVocabSize: Int = 50, z: Double = 1.96) extends ModelBuild {
   val name = "ML"
 
+  private var ensemble: GbtTrainer.Ensemble = _
   private var model: GBTRegressionModel = _
   private var state: MlCore.State = _
   private var residSigma: Double = _
 
   private def params = GbtParams(maxDepth, maxIter, stepSize)
+
+  /** The fitted trees, and the MLlib model `predict` and the importances
+    * read, built from them. */
+  private def setEnsemble(e: GbtTrainer.Ensemble): Unit = {
+    ensemble = e
+    model = GbtModel.model(newGbt(params), e)
+  }
+
+  /** The fitted MLlib model. */
+  private[graft] def gbtModel: GBTRegressionModel = model
 
   private def newGbt(p: GbtParams) = new GBTRegressor()
     .setLabelCol("y_fit").setFeaturesCol("features")
@@ -321,11 +335,11 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
           }
           (ens, math.sqrt(sq / rows.length))
         }
-        (GbtModel.model(gbt, ens), sigma)
+        (ens, sigma)
       }
       val winner = if (best == params) this
         else new GbtModel(lags, best.maxIter, best.maxDepth, best.stepSize, logY, nlpVocabSize, z)
-      winner.model = fitted
+      winner.setEnsemble(fitted)
       winner.residSigma = sigma
       winner.state = MlCore.state(df, in, df, y)
       (winner, best, scores)
@@ -375,15 +389,17 @@ class GbtModel(lags: Int = 2, maxIter: Int = 50, maxDepth: Int = 2,
       .toSeq.toDF("feature", "importance")
   }
 
-  /** MLlib writer for the tree ensemble + params-JSON for the bounded
-    * local state (lag tail, calendar anchor, NLP vocabularies). */
+  /** params-JSON for the settings and the bounded local state (lag tail,
+    * calendar anchor, NLP vocabularies) and, beside it, the tree ensemble
+    * as [[GbtTrainer.Ensemble.write]] stores it: written on the driver, no
+    * Spark job. */
   def save(dir: String): Unit = {
-    model.write.overwrite().save(s"$dir/gbt")
     Persist.writeJson(dir,
       ("type" -> "ml") ~ ("lags" -> lags) ~ ("maxIter" -> maxIter) ~
       ("maxDepth" -> maxDepth) ~ ("stepSize" -> stepSize) ~ ("logY" -> logY) ~
       ("nlpVocabSize" -> nlpVocabSize) ~ ("z" -> z) ~
       state.json("tailY", Some(residSigma)))
+    GbtTrainer.Ensemble.write(ensemble, Paths.get(dir, GbtModel.EnsembleFile))
   }
 }
 
@@ -405,6 +421,9 @@ class SearchedGbtModel(lags: Int = 2, z: Double = 1.96) extends ModelBuild {
   def predict(spark: SparkSession, h: Int, future: Option[DataFrame] = None): DataFrame =
     inner.predict(spark, h, future)
 
+  /** The fitted winner. */
+  private[graft] def winner: GbtModel = inner
+
   /** Persists the WINNER — reloads as a plain GbtModel. */
   def save(dir: String): Unit = inner.save(dir)
 }
@@ -412,13 +431,27 @@ class SearchedGbtModel(lags: Int = 2, z: Double = 1.96) extends ModelBuild {
 object GbtModel {
   import Persist.formats
 
+  /** The ensemble's file in a saved model's directory. */
+  private val EnsembleFile = "ensemble.bin"
+
+  /** Reads what [[GbtModel.save]] writes, and the earlier layout, whose
+    * trees MLlib's writer stored under `gbt/` (read by MLlib's reader, a
+    * few Spark jobs, and turned back by `TreeBridge.fromMl`). Either way
+    * the model is rebuilt from the trees by `TreeBridge.model`, and a
+    * re-save writes the current layout. */
   def load(dir: String): GbtModel = {
     val j = Persist.readJson(dir)
     val m = new GbtModel((j \ "lags").extract[Int], (j \ "maxIter").extract[Int],
       (j \ "maxDepth").extract[Int], (j \ "stepSize").extract[Double],
       (j \ "logY").extract[Boolean], (j \ "nlpVocabSize").extract[Int],
       (j \ "z").extract[Double])
-    m.model = GBTRegressionModel.load(s"$dir/gbt")
+    val file = Paths.get(dir, EnsembleFile)
+    m.setEnsemble(
+      if (Files.exists(file)) GbtTrainer.Ensemble.read(file)
+      else {
+        val (trees, weights, numFeatures) = TreeBridge.fromMl(GBTRegressionModel.load(s"$dir/gbt"))
+        GbtTrainer.Ensemble(trees.toArray, weights, numFeatures)
+      })
     m.state = MlCore.State.load(j, "tailY")(s => s"${s.target}_lag")
     m.residSigma = (j \ "residSigma").extract[Double]
     m

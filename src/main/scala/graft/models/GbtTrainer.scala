@@ -1,6 +1,9 @@
 package graft.models
 
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.nio.file.{Files, Path}
 import java.util.Locale
+import java.util.zip.{DeflaterOutputStream, InflaterInputStream}
 
 import scala.collection.mutable
 
@@ -76,6 +79,58 @@ private[models] object GbtTrainer {
 
   /** One tree per boosting iteration, with its weight. */
   final case class Ensemble(trees: Array[Node], weights: Array[Double], numFeatures: Int)
+
+  /** An ensemble's file: a version tag, the feature count, the tree count,
+    * each tree's weight, then each tree's nodes in pre-order (a tag byte,
+    * 0 leaf or 1 split; prediction, impurity, and for a split its gain,
+    * feature and threshold; the statistics: count, sum, sum of squares,
+    * raw count; then a split's left and right subtrees), deflated. Doubles
+    * are written as their IEEE-754 bits, so a read gives back every node
+    * bit for bit, and equal ensembles give equal bytes. */
+  object Ensemble {
+    private val Version = 1
+
+    def write(e: Ensemble, path: Path): Unit = {
+      val out = new DataOutputStream(new DeflaterOutputStream(
+        new BufferedOutputStream(Files.newOutputStream(path))))
+      def double(v: Double): Unit = out.writeLong(java.lang.Double.doubleToRawLongBits(v))
+      def stats(s: Stats): Unit = { double(s.count); double(s.sum); double(s.sumSq); out.writeLong(s.rawCount) }
+      def node(n: Node): Unit = n match {
+        case Leaf(p, imp, s) => out.writeByte(0); double(p); double(imp); stats(s)
+        case Split(p, imp, gain, f, t, l, r, s) =>
+          out.writeByte(1); double(p); double(imp); double(gain); out.writeInt(f); double(t); stats(s)
+          node(l); node(r)
+      }
+      try {
+        out.writeInt(Version); out.writeInt(e.numFeatures); out.writeInt(e.trees.length)
+        e.weights.foreach(double)
+        e.trees.foreach(node)
+      } finally out.close()
+    }
+
+    def read(path: Path): Ensemble = {
+      val in = new DataInputStream(new InflaterInputStream(
+        new BufferedInputStream(Files.newInputStream(path))))
+      def double(): Double = java.lang.Double.longBitsToDouble(in.readLong())
+      def stats(): Stats = Stats(double(), double(), double(), in.readLong())
+      def node(): Node = in.readByte() match {
+        case 0 => Leaf(double(), double(), stats())
+        case 1 =>
+          val (p, imp, gain, f, t, s) = (double(), double(), double(), in.readInt(), double(), stats())
+          val l = node()
+          Split(p, imp, gain, f, t, l, node(), s)
+        case b => throw new IllegalArgumentException(s"$path: bad node tag $b")
+      }
+      try {
+        val v = in.readInt()
+        require(v == Version, s"$path: ensemble file version $v, expected $Version")
+        val numFeatures = in.readInt()
+        val n = in.readInt()
+        val weights = Array.fill(n)(double())
+        Ensemble(Array.fill(n)(node()), weights, numFeatures)
+      } finally in.close()
+    }
+  }
 
   /** MLlib's `Utils.EPSILON`, the machine epsilon. */
   private val Epsilon = math.ulp(1.0)

@@ -52,22 +52,17 @@ trait ModelBuild {
   def save(dir: String): Unit
 }
 
+object FutureExog {
+  /** Collect a future frame's exog columns in ts order (shared by every
+    * model that supports known-future exog at predict time), through
+    * [[LocalSeries.byTime]]. Bounded by the forecast horizon. */
+  def collect(f: DataFrame, tsCol: String, exog: Seq[String]): Array[Array[Double]] =
+    LocalSeries.byTime(f, tsCol, exog).map(_._2)
+}
+
 /** Collected bounded series (the unit local estimators work on — the
   * reference is single-series; at scale the same math runs once per
   * series inside flatMapGroups). */
-object FutureExog {
-  /** Collect a future frame's exog columns in ts order (shared by every
-    * model that supports known-future exog at predict time). Bounded by
-    * the forecast horizon. */
-  def collect(f: org.apache.spark.sql.DataFrame, tsCol: String,
-              exog: Seq[String]): Array[Array[Double]] = {
-    import org.apache.spark.sql.functions.col
-    f.orderBy(col(tsCol))
-      .select(exog.map(c => col(c).cast("double")): _*)
-      .collect().map(r => exog.indices.map(r.getDouble).toArray)
-  }
-}
-
 case class LocalSeries(ts: Array[Long], y: Array[Double], exog: Array[Array[Double]]) {
   def n: Int = y.length
   def intervalMs: Long = LocalSeries.interval(ts)
@@ -76,18 +71,33 @@ case class LocalSeries(ts: Array[Long], y: Array[Double], exog: Array[Array[Doub
 object LocalSeries {
   import org.apache.spark.sql.functions._
 
-  /** Collect one bounded series to the driver, ordered by time.
-    * Deliberately mirrors the reference contract (pandas in-memory); the
-    * many-series scale path goes through flatMapGroups instead. */
+  /** Collect one bounded series to the driver, ordered by time, through
+    * [[byTime]]. Deliberately mirrors the reference contract (pandas
+    * in-memory); the many-series scale path goes through flatMapGroups
+    * instead. */
   def collect(df: DataFrame, schema: TsSchema): LocalSeries = {
-    val cols = Seq(col(schema.tsCol).cast("timestamp").cast("double") * 1000)
-      .++(Seq(col(schema.target).cast("double")))
-      .++(schema.exog.map(c => col(c).cast("double")))
-    val rows = df.select(cols: _*).orderBy(col(schema.tsCol)).collect()
-    LocalSeries(
-      rows.map(_.getDouble(0).toLong),
-      rows.map(_.getDouble(1)),
-      rows.map(r => Array.tabulate(schema.exog.size)(i => r.getDouble(2 + i))))
+    val rows = byTime(df, schema.tsCol, schema.target +: schema.exog)
+    LocalSeries(rows.map(_._1), rows.map(_._2(0)), rows.map(_._2.drop(1)))
+  }
+
+  /** `df`'s rows as (epoch ms of `tsCol`, `cols` cast to double), in time
+    * order. ONE Spark job: a plain collect of the bounded frame, then a
+    * stable sort by epoch ms on the driver (a Spark `orderBy` would add
+    * range-partition sampling jobs). A NULL, or a value that does not
+    * cast, fails with an `IllegalArgumentException` naming its column. */
+  private[models] def byTime(df: DataFrame, tsCol: String,
+                             cols: Seq[String]): Array[(Long, Array[Double])] = {
+    val names = tsCol +: cols
+    val rows = df.select(col(tsCol).cast("timestamp").cast("double") * 1000 +:
+                         cols.map(c => col(c).cast("double")): _*).collect()
+    rows.map { r =>
+      names.indices.find(r.isNullAt).foreach { i =>
+        throw new IllegalArgumentException(s"column '${names(i)}' has a NULL value (or one that " +
+          s"does not cast to ${if (i == 0) "a timestamp" else "double"}); a local model needs a " +
+          "value in every row")
+      }
+      (r.getDouble(0).toLong, Array.tabulate(cols.size)(i => r.getDouble(1 + i)))
+    }.sortBy(_._1)
   }
 
   /** The step every family forecasts with: ts(1) − ts(0) of a time-ordered

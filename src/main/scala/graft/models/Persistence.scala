@@ -7,12 +7,13 @@ import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods._
 
 /** Model persistence — the reference accepts a pre-trained model at
-  * predict time (`auto_ts/__init__.py:953-956`, `load_model`); the
-  * Spark-native durable form is: MLlib writers for the GBT ensembles
-  * (their trees are distributed objects with a stable on-disk format) and
-  * a params.json carrying coefficient arrays + bounded tail state for the
-  * closed-form estimators (ARIMA/VAR/Prophet-like), whose whole fitted
-  * state is a few hundred doubles.
+  * predict time (`auto_ts/__init__.py:953-956`, `load_model`). Every
+  * model writes a params.json: coefficient arrays + bounded tail state for
+  * the closed-form estimators (ARIMA/VAR/Prophet-like), whose whole fitted
+  * state is a few hundred doubles, and the settings and forecast state of
+  * the GBT models. Their trees go beside it: [[GbtModel]]'s in its own
+  * compact file ([[GbtTrainer.Ensemble]]), [[GbtClassifyTs]]'s through
+  * MLlib's writer, because MLlib trains it.
   *
   * Every params.json carries a `type` tag; [[ModelIO.load]] dispatches on
   * it, so a directory saved by any `ModelBuild.save` round-trips through

@@ -49,8 +49,8 @@ object ModelQueries {
   }
 
   /** M2 — the ARIMA order search itself: the chosen (p,d,q) cell and its
-    * AIC over the full monthly series (grid = parallel Spark job over the
-    * broadcast series; reference `param_finder.py:18-143`). */
+    * AIC over the full monthly series (grid = one Spark job over the
+    * series' cells; reference `param_finder.py:18-143`). */
   private def m2ParamSearch: Q = (s, d) => {
     val spark = s
     import spark.implicits._

@@ -4,15 +4,15 @@ import org.apache.spark.ml.param.{Param, Params}
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, GBTRegressionModel,
   GBTRegressor}
 import org.apache.spark.ml.tree.{ContinuousSplit, InternalNode, LeafNode, Node => MlNode}
-import org.apache.spark.mllib.tree.impurity.VarianceCalculator
+import org.apache.spark.mllib.tree.impurity.{ImpurityCalculator, VarianceCalculator}
 import org.apache.spark.util.random.{BernoulliSampler, XORShiftRandom}
 
 /** Trees grown outside MLlib, turned into a real `GBTRegressionModel`, so
-  * `predict`, `featureImportances` and MLlib's writer and reader work on
-  * them unchanged. The node, split, tree and ensemble constructors are
-  * `private[ml]` and the variance calculator and MLlib's split-sampling
-  * random generator are `private[spark]`; this object is the one place
-  * that crosses them. */
+  * `predict` and `featureImportances` work on them unchanged, and an MLlib
+  * ensemble's trees turned back ([[fromMl]]). The node, split, tree and
+  * ensemble constructors and the nodes' statistics are `private[ml]` and
+  * the variance calculator and MLlib's split-sampling random generator are
+  * `private[spark]`; this object is the one place that crosses them. */
 object TreeBridge {
 
   /** A node's variance statistics, as MLlib's `VarianceCalculator` holds
@@ -35,6 +35,26 @@ object TreeBridge {
     copyValues(gbt, new GBTRegressionModel(gbt.uid, dts.toArray, weights, numFeatures))
       .setParent(gbt)
   }
+
+  /** The trees, tree weights and feature count of an MLlib ensemble, as
+    * [[model]] takes them: how a model saved by MLlib's writer is read
+    * back. Every split must be continuous. */
+  def fromMl(m: GBTRegressionModel): (Seq[Node], Array[Double], Int) =
+    (m.trees.toSeq.map(t => fromMl(t.rootNode)), m.treeWeights, m.numFeatures)
+
+  private def fromMl(n: MlNode): Node = n match {
+    case l: LeafNode => Leaf(l.prediction, l.impurity, stats(l.impurityStats))
+    case i: InternalNode => i.split match {
+      case s: ContinuousSplit =>
+        Split(i.prediction, i.impurity, i.gain, s.featureIndex, s.threshold,
+          fromMl(i.leftChild), fromMl(i.rightChild), stats(i.impurityStats))
+      case s => throw new IllegalArgumentException(
+        s"TreeBridge: continuous splits only, not a split on categorical feature ${s.featureIndex}")
+    }
+  }
+
+  private def stats(c: ImpurityCalculator): Stats =
+    Stats(c.stats(0), c.stats(1), c.stats(2), c.rawCount)
 
   /** The rows of an n-row, one-partition input that MLlib's `findSplits`
     * keeps when it samples `fraction` of them for split candidates:

@@ -1152,4 +1152,177 @@ class ModelsSpec extends SparkTestBase {
       assert(board.schema == oracle.drop("i").schema)
     }
   }
+
+  /** The perfbench series (80 monthly rows, target price, exog n_orders)
+    * as a parquet scan, so a collect of it is a Spark job. Reading the
+    * file's schema is a job too, so take the frame before counting. */
+  private lazy val monthly = spark.read.parquet("perfbench/fixtures/orders_monthly.parquet")
+  private val monthlySchema = TsSchema("ts", "price", Seq("n_orders"))
+
+  test("ArimaModel.fit with cv = 2 runs its series collect and one grid job, seasonal or not") {
+    val df = monthly
+    for (m <- Seq(12, 1)) {
+      val (jobs, _) = jobsOf(s"arima-jobs-$m")(
+        new ArimaModel(seasonalM = m).fit(df, monthlySchema, cv = 2, h = 8))
+      assert(jobs <= 2, s"seasonalM = $m: $jobs Spark jobs")
+    }
+  }
+
+  test("VarModel.fit and DecomposableModel.fit collect the series in one job") {
+    val df = monthly
+    for (mb <- Seq(new VarModel(seasonalM = 12), new DecomposableModel(seasonalPeriod = 12))) {
+      val (jobs, _) = jobsOf(s"local-jobs-${mb.name}")(mb.fit(df, monthlySchema, cv = 2, h = 8))
+      assert(jobs == 1, s"${mb.name}: $jobs Spark jobs")
+    }
+  }
+
+  test("the ARIMA fan-out deals cells round-robin over the tasks of one job, results in cell order") {
+    val k = spark.sparkContext.defaultParallelism
+    assert(k > 1)
+    val cells = 0 until 3 * k + 1
+    var out: Seq[(Int, Int)] = Nil
+    val (jobs, _) = jobsOf("fan-out") {
+      out = ArimaCss.fanOut(spark, cells) { i =>
+        // later cells finish first, so arrival order is not cell order
+        Thread.sleep(5L * (cells.size - i))
+        (i, org.apache.spark.TaskContext.getPartitionId())
+      }
+    }
+    assert(jobs == 1, s"$jobs Spark jobs")
+    assert(out.map(_._1) == cells)
+    assert(out.forall { case (i, task) => task == i % k }, out)
+    assert(ArimaCss.fanOut(spark, Seq.empty[Int])(identity).isEmpty)
+  }
+
+  test("an ARIMA grid with two equal-score cells picks the first, in either search") {
+    val rnd = graft.core.DetRandom.doubles(5L)
+    val y = Array.tabulate(60)(t => 10.0 + 3.0 * math.sin(t * math.Pi / 6) + rnd())
+    // no AR or MA lags and no differencing: m does not enter the fit, so
+    // both cells fit the same model with the same score
+    val (a, b) = (ArimaCss.Spec(0, 0, 0), ArimaCss.Spec(0, 0, 0, m = 12))
+    val grid = ArimaCss.gridPlan(y)
+    for (first <- Seq(a, b)) {
+      val second = if (first == a) b else a
+      val cells = Seq(first, second).map(ArimaCss.Cell(y, Array.empty, _))
+      assert(ArimaCss.runSearches(spark, Seq(grid.copy(cells = cells))).head.spec == first)
+      val (train, held) = (y.dropRight(8), y.takeRight(8))
+      val seasonal = ArimaCss.seasonalPlan(spark, y, 12)
+      val scored = Seq(first, second).map(ArimaCss.Cell(train, Array.empty, _, held))
+      assert(ArimaCss.runSearches(spark, Seq(seasonal.copy(cells = scored))).head.spec == first)
+    }
+  }
+
+  /** The model's trees (uid dropped), weights and importances. */
+  private def ensembleOf(m: GbtModel): (Seq[String], Seq[Double], Seq[Double]) = {
+    val g = m.gbtModel
+    (g.trees.toSeq.map(_.toDebugString.replaceFirst("uid=[^,]*, ", "")),
+     g.treeWeights.toSeq, g.featureImportances.toArray.toSeq)
+  }
+
+  /** Every file under `dir` by relative path, with its bytes. */
+  private def files(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
+  /** A text-driven series: the promo lift is announced only in `note`. */
+  private def noteSeries = {
+    import spark.implicits._
+    (0 until 48).map { t =>
+      val promo = t % 7 == 2
+      (java.sql.Timestamp.from(java.time.LocalDate.of(2015, 1, 1).plusMonths(t.toLong)
+         .atStartOfDay(java.time.ZoneOffset.UTC).toInstant),
+       50.0 + (if (promo) 40.0 else 0.0) + (t % 5) * 0.7,
+       (if (promo) "big promotion event announced with heavy discounts"
+        else "ordinary trading conditions continued as before") + s" batch $t")
+    }.toDF("ts", "y", "note")
+  }
+
+  test("GBT save -> load keeps trees, weights, importances and predictions bit-identical, no Spark job") {
+    val logNlp = new GbtModel(lags = 2, logY = true)
+    logNlp.fit(noteSeries, TsSchema("ts", "y", Seq("note")), cv = 1, h = 4)
+    val searched = fitted("SearchedGbtModel").asInstanceOf[SearchedGbtModel]
+    val models: Seq[(String, ModelBuild, GbtModel)] = Seq(
+      ("GbtModel", fitted("GbtModel"), fitted("GbtModel").asInstanceOf[GbtModel]),
+      ("GbtModel logY NLP", logNlp, logNlp),
+      ("SearchedGbtModel", searched, searched.winner))
+    for ((tag, mb, gbt) <- models) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-gbt-io").toString
+      val before = mb.predict(spark, 6).collect().toSeq
+      var loaded: GbtModel = null
+      var after: Seq[org.apache.spark.sql.Row] = Nil
+      val (jobs, _) = jobsOf(s"gbt-io-$tag") {
+        mb.save(dir)
+        loaded = ModelIO.load(dir).asInstanceOf[GbtModel]
+        after = loaded.predict(spark, 6).collect().toSeq
+      }
+      assert(jobs == 0, s"$tag: $jobs Spark jobs for save, load and predict")
+      assert(after == before, s"$tag: predictions differ")
+      assert(ensembleOf(loaded) == ensembleOf(gbt), s"$tag: trees, weights or importances differ")
+      assert(files(dir).keySet == Set("params.json", "ensemble.bin"), s"$tag: ${files(dir).keySet}")
+    }
+  }
+
+  test("two saves of one fit are byte-identical on every regression family") {
+    fitted.filter(_._1 != "GbtClassifyTs").foreach { case (tag, m) =>
+      val Seq(a, b) = Seq.fill(2)(java.nio.file.Files.createTempDirectory("graft-det").toString)
+      m.save(a); m.save(b)
+      val (fa, fb) = (files(a), files(b))
+      assert(fa.nonEmpty && fa == fb, s"$tag: the two saves differ")
+    }
+  }
+
+  test("a GbtModel directory whose trees MLlib's writer saved loads, predicts and re-saves") {
+    val m = fitted("GbtModel").asInstanceOf[GbtModel]
+    val Seq(current, legacy, resaved) =
+      Seq.fill(3)(java.nio.file.Files.createTempDirectory("graft-legacy").toString)
+    m.save(current)
+    // the earlier layout: the same params.json, the trees under gbt/
+    java.nio.file.Files.copy(java.nio.file.Paths.get(current, "params.json"),
+      java.nio.file.Paths.get(legacy, "params.json"))
+    m.gbtModel.write.save(s"$legacy/gbt")
+    val loaded = ModelIO.load(legacy).asInstanceOf[GbtModel]
+    assert(rows(loaded.predict(spark, 6)) == rows(m.predict(spark, 6)))
+    assert(ensembleOf(loaded) == ensembleOf(m))
+    loaded.save(resaved)
+    assert(files(resaved) == files(current))
+  }
+
+  /** [[exogSeries]] with a NULL in `column` at row 30. */
+  private def withNull(column: String) = {
+    val df = exogSeries
+    val i = df.columns.indexOf(column)
+    spark.createDataFrame(
+      java.util.Arrays.asList(df.collect().zipWithIndex.map { case (r, t) =>
+        org.apache.spark.sql.Row.fromSeq(r.toSeq.updated(i, if (t == 30) null else r.get(i)))
+      }: _*),
+      org.apache.spark.sql.types.StructType(df.schema.map(_.copy(nullable = true))))
+  }
+
+  // VAR forecasts its exog itself and reads no future frame
+  Seq[(String, () => ModelBuild, Boolean)](
+    ("ArimaModel", () => new ArimaModel(maxP = 1, maxD = 1, maxQ = 1), true),
+    ("VarModel", () => new VarModel(seasonalM = 12), false),
+    ("DecomposableModel", () => new DecomposableModel(seasonalPeriod = 12), true)).foreach {
+    case (tag, make, readsFuture) =>
+      test(s"$tag: a NULL timestamp, target or exog value fails naming its column") {
+        val schema = TsSchema("ts", "y", Seq("x"))
+        for (c <- Seq("ts", "y", "x")) {
+          val e = intercept[IllegalArgumentException](make().fit(withNull(c), schema, cv = 1, h = 4))
+          assert(e.getMessage.contains(s"column '$c' has a NULL value"), e.getMessage)
+        }
+        if (readsFuture) {
+          val m = make()
+          m.fit(exogSeries, schema, cv = 1, h = 4)
+          for (c <- Seq("ts", "x")) {
+            val e = intercept[IllegalArgumentException](m.predict(spark, 4, Some(withNull(c))))
+            assert(e.getMessage.contains(s"column '$c' has a NULL value"), e.getMessage)
+          }
+        }
+      }
+  }
 }
