@@ -182,10 +182,7 @@ object DatetimeFormatInfer {
     * honors the caller's pattern. */
   def loadCsv(spark: SparkSession, path: String, tsColumn: String,
               sep: String = ",", fmt: Option[String] = None): DataFrame = {
-    val raw = spark.read
-      .option("header", "true").option("sep", sep)
-      .option("inferSchema", fmt.isEmpty.toString)
-      .csv(path)
+    val raw = graft.Tables.csv(spark, path, sep, inferSchema = fmt.isEmpty)
     val deduped = graft.core.CleanOps.dedupeColumns(raw)
     val schema = deduped.schema(tsColumn).dataType
     schema match {

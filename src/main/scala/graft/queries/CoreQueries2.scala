@@ -435,19 +435,23 @@ object CoreQueries2 {
     s"target/$kind/${new java.io.File(d).getName}-${java.lang.Long.toHexString(fpOf(f))}"
   }
 
+  /** The orders columns the S1/S2 scans round-trip, with the order date
+    * as a plain string; read only when a one-time copy is written. */
+  private def ordersScanCopy(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"), col("o_orderstatus"))
+      .withColumn("o_orderdate", date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"))
+
   /** Round-trips orders through a pipe-separated CSV (written under
     * target/) and reads it back via the S1 loader (header, custom sep,
     * dedupe, datetime parse) — the oracle is the original parquet table. */
   private def s1CsvScan: Q = (s, d) => {
-    val o = Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"), col("o_orderstatus"))
-      .withColumn("o_orderdate", date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"))
     val path = sinkPath("csv_scan", d, "orders")
     // the CSV copy of the testdata is materialized once per source
     // fingerprint — the operator under test is the SCAN + datetime
     // parse, not the export
     if (!new java.io.File(s"$path/_SUCCESS").isFile)
-      o.coalesce(4).write.mode("overwrite")
+      ordersScanCopy(s, d).coalesce(4).write.mode("overwrite")
         .option("header", "true").option("sep", "|").csv(path)
     DatetimeFormatInfer.loadCsv(s, path, "o_orderdate", "|")
       .select(col("o_orderkey"), tsStr(col("o_orderdate")).as("o_date"),
@@ -464,12 +468,9 @@ object CoreQueries2 {
     * once per sf dir, then the measured operator is the scan + schema
     * application + datetime parse. */
   private def s2JsonScan: Q = (s, d) => {
-    val o = Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"), col("o_orderstatus"))
-      .withColumn("o_orderdate", date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"))
     val path = sinkPath("json_scan", d, "orders")
     if (!new java.io.File(s"$path/_SUCCESS").isFile)
-      o.coalesce(4).write.mode("overwrite").json(path)
+      ordersScanCopy(s, d).coalesce(4).write.mode("overwrite").json(path)
     s.read.schema("o_orderkey BIGINT, o_orderdate STRING, o_totalprice DOUBLE, o_orderstatus STRING")
       .json(path)
       .select(col("o_orderkey"),

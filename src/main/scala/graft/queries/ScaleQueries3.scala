@@ -2142,7 +2142,7 @@ object ScaleQueries3 {
         alpha = 0.5, beta = 0.25, gamma = 0.25, tieBreak = Some("event_id"))
       .select(col("user_id"), col("quadrant"), col("winner"))
       .write.mode("overwrite").parquet(out)
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   private val f10Sql =

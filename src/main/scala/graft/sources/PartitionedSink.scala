@@ -22,5 +22,5 @@ object PartitionedSink {
   /** Read the partitioned dataset back. Filters on `partCol` applied by
     * the caller prune at planning time. */
   def read(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
+    graft.Tables.parquet(spark, outDir)
 }

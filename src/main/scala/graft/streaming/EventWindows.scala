@@ -39,11 +39,10 @@ object EventWindows {
   def tumblingStreaming(spark: SparkSession, sfDir: String,
                         windowLen: String = "1 hour"): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchDf = graft.Tables.events(spark, sfDir)
     // the file stream source needs a DIRECTORY; select just the events
     // table out of the shared sf dir with a glob filter
     val stream = graft.Tables.normalizeEventTs(spark.readStream
-      .schema(spark.read.parquet(s"$sfDir/events.parquet").schema)
+      .schema(graft.Tables.parquet(spark, s"$sfDir/events.parquet").schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir))
     val agg = stream

@@ -32,7 +32,7 @@ object StreamEnrich {
     * harness for what runs continuously against Kafka/files in prod). */
   def enrichStreaming(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = graft.Tables.parquet(spark, s"$sfDir/events.parquet").schema
     val raw = spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")

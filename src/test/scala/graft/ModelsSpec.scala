@@ -904,44 +904,6 @@ class ModelsSpec extends SparkTestBase {
     assert((j \ "z").extract[Double] == ForecastFrame.zFor(0.8))
   }
 
-  /** The Spark jobs `body` runs under the job group `group`: how many, and
-    * the result bytes their result tasks send to the driver. The fold
-    * runner's threads inherit the group, so jobs of other suites are not
-    * counted. */
-  private def jobsOf(group: String)(body: => Any): (Int, Long) = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val tracked = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val bytes = new java.util.concurrent.atomic.AtomicLong()
-    val drained = new java.util.concurrent.Semaphore(0)
-    @volatile var drainJob = -1
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet(); e.stageIds.foreach(tracked.add)
-          case g if g == s"$group-drain" => drainJob = e.jobId
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == drainJob) drained.release()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (tracked.contains(e.stageId) && e.taskType == "ResultTask" && e.taskMetrics != null)
-          bytes.addAndGet(e.taskMetrics.resultSize)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      // the listener bus is FIFO: once a later job's end arrives, every
-      // job and task event of `body` has been delivered
-      sc.setJobGroup(s"$group-drain", "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      (jobs.get, bytes.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("GbtModel fit: driver-bound result bytes do not grow with the series length") {
     import spark.implicits._
     def driverBytes(n: Int): Long = {

@@ -1,0 +1,175 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.util.Try
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
+import graft.infer.DatetimeFormatInfer
+
+/** The source-schema memo behind `Tables.parquet` and `Tables.csv`: a
+  * remembered schema reads exactly what Spark's inferring read does, and
+  * the second read of an unchanged source runs no Spark job. */
+class SourceSchemaSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  /** The rows as sorted strings: an order-free digest of the content. */
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** Reads once (inferring, unless an earlier suite already did), then
+    * again, and returns the second read, which must run no job. */
+  private def secondRead(group: String)(read: => DataFrame): DataFrame = {
+    read
+    var df: DataFrame = null
+    val (jobs, _) = jobsOf(group) { df = read }
+    assert(jobs == 0, s"$group: the second read of an unchanged source ran $jobs jobs")
+    df
+  }
+
+  /** Same names, types, nullability and field metadata (StructField
+    * equality covers all four), and the same rows. */
+  private def assertSame(hit: DataFrame, fresh: DataFrame): Unit = {
+    assert(hit.schema == fresh.schema, s"${hit.schema.treeString} vs ${fresh.schema.treeString}")
+    assert(rowsOf(hit) == rowsOf(fresh))
+  }
+
+  /** The schema `read` resolves to, or the class and message of its error. */
+  private def outcome(read: => DataFrame): String =
+    Try(read.schema).fold(e => s"${e.getClass.getName}: ${e.getMessage}", _.treeString)
+
+  test("events: a memo hit reads the inferring read's schema and rows, with no job") {
+    val path = s"$SF/events.parquet"
+    assertSame(secondRead("memo-events-raw")(Tables.parquet(spark, path)), spark.read.parquet(path))
+    val events = secondRead("memo-events")(Tables.events(spark, SF))
+    assertSame(events, Tables.normalizeSchema(spark.read.parquet(path)))
+    assert(events.schema("ts").dataType == TimestampType)
+  }
+
+  test("a TIMESTAMP(NANOS) source: hits under nanosAsLong, and the conf is part of the key") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmp("graft-memo-nanos")
+    val msg = MessageTypeParser.parseMessageType(
+      "message ev { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/ev.parquet"))
+      .withType(msg).withConf(new org.apache.hadoop.conf.Configuration()).build()
+    val groups = new SimpleGroupFactory(msg)
+    try (0 until 5).foreach { i =>
+      w.write(groups.newGroup().append("event_id", i.toLong)
+        .append("ts", 1700000000000000000L + i * 1000000000L))
+    } finally w.close()
+    val path = s"$dir/ev.parquet"
+    val ev = secondRead("memo-nanos")(Tables.t(spark, dir, "ev"))
+    assertSame(ev, Tables.normalizeSchema(spark.read.parquet(path)))
+    assert(Tables.parquet(spark, path).schema("ts").dataType == LongType)
+    assert(ev.orderBy("event_id").select(col("ts").cast("long")).as[Long].collect().toSeq ==
+      (0 until 5).map(1700000000L + _))
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    try {
+      spark.conf.set(key, "false")
+      var got = ""
+      val (jobs, _) = jobsOf("memo-nanos-off") { got = outcome(Tables.parquet(spark, path)) }
+      assert(jobs >= 1, "a changed nanosAsLong must infer again")
+      assert(got == outcome(spark.read.parquet(path)))
+    } finally spark.conf.set(key, "true")
+    secondRead("memo-nanos-on")(Tables.parquet(spark, path))
+  }
+
+  test("DATE and DECIMAL columns: a memo hit normalizes to the same schema and rows") {
+    val dir = tmp("graft-memo-orders")
+    Seq((1L, "2024-01-02", "10.25"), (2L, "2024-02-03", "7.50"))
+      .toDF("o_orderkey", "d", "p")
+      .select(col("o_orderkey"), to_date(col("d")).as("o_orderdate"),
+              col("p").cast("decimal(12,2)").as("o_totalprice"))
+      .write.parquet(s"$dir/orders.parquet")
+    val orders = secondRead("memo-orders")(Tables.orders(spark, dir))
+    assertSame(orders, Tables.normalizeSchema(spark.read.parquet(s"$dir/orders.parquet")))
+    assert(orders.schema("o_orderdate").dataType == TimestampType)
+    assert(orders.schema("o_totalprice").dataType.simpleString == "double")
+  }
+
+  test("partitioned sink: a memo hit keeps the partition column and prunes at planning time") {
+    val path = tmp("graft-memo-part") + "/sink"
+    graft.sources.PartitionedSink.write(Tables.events(spark, SF), "event_type", path)
+    val hit = secondRead("memo-part")(graft.sources.PartitionedSink.read(spark, path))
+    assertSame(hit, spark.read.parquet(path))
+    val scan = hit.filter(col("event_type") === "purchase").queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scan.nonEmpty)
+    assert(scan.head.partitionFilters.exists(_.toString.contains("event_type")),
+      s"no partition filter on scan: ${scan.head.partitionFilters}")
+    assert(scan.head.selectedPartitions.partitionCount == 1)
+  }
+
+  test("loadCsv: a memo hit reads the same schema and rows, with no job") {
+    val dir = tmp("graft-memo-csv")
+    Files.writeString(Paths.get(dir, "a.csv"),
+      "ts|v|v|n\n2024-01-01 00:00:00|1.5|x|3\n2024-01-02 06:30:00|2.25|y|4\n")
+    val path = s"$dir/a.csv"
+    val fresh = spark.read.option("header", "true").option("sep", "|")
+      .option("inferSchema", "true").csv(path)
+    assertSame(secondRead("memo-csv-raw")(Tables.csv(spark, path, "|")), fresh)
+    val first = DatetimeFormatInfer.loadCsv(spark, path, "ts", "|")
+    var hit: DataFrame = null
+    val (jobs, _) = jobsOf("memo-csv") { hit = DatetimeFormatInfer.loadCsv(spark, path, "ts", "|") }
+    assert(jobs == 0, s"a second loadCsv ran $jobs jobs")
+    assertSame(hit, first)
+    assert(hit.schema("ts").dataType == TimestampType)
+    // a forced format reads every column as a string, under its own key
+    val fmt = Some("yyyy-MM-dd HH:mm:ss")
+    val forced = DatetimeFormatInfer.loadCsv(spark, path, "ts", "|", fmt)
+    assertSame(secondRead("memo-csv-fmt")(DatetimeFormatInfer.loadCsv(spark, path, "ts", "|", fmt)),
+      forced)
+    assert(forced.schema("n").dataType.simpleString == "string")
+    assert(rowsOf(forced.select("ts")) == rowsOf(hit.select("ts")))
+  }
+
+  test("a rewritten source is inferred again") {
+    val path = tmp("graft-memo-rw") + "/t"
+    Seq(1L, 2L).toDF("id").write.parquet(path)
+    secondRead("memo-rw-1")(Tables.parquet(spark, path))
+    Seq((3L, "c")).toDF("id", "x").write.mode("overwrite").parquet(path)
+    var df: DataFrame = null
+    val (jobs, _) = jobsOf("memo-rw-2") { df = Tables.parquet(spark, path) }
+    assert(jobs >= 1, "a rewrite must infer again")
+    assertSame(df, spark.read.parquet(path))
+    assert(df.columns.toSeq == Seq("id", "x"))
+  }
+
+  test("a missing path or an empty directory fails with Spark's own error") {
+    val missing = tmp("graft-memo-missing") + "/nope.parquet"
+    val err = outcome(Tables.parquet(spark, missing))
+    assert(err.contains("Exception") && err == outcome(spark.read.parquet(missing)))
+    assert(outcome(Tables.csv(spark, missing, ",")) ==
+      outcome(spark.read.option("header", "true").option("sep", ",")
+        .option("inferSchema", "true").csv(missing)))
+    val empty = tmp("graft-memo-empty")
+    val before = Tables.memoSize
+    val emptyErr = outcome(Tables.parquet(spark, empty))
+    assert(emptyErr.contains("Exception") && emptyErr == outcome(spark.read.parquet(empty)))
+    assert(Tables.memoSize == before, "a failed read must not be remembered")
+  }
+
+  test("the memo never grows past its cap and evicts the least recently used") {
+    val dir = tmp("graft-memo-cap")
+    val paths = (0 until Tables.MemoCap + 8).map { i =>
+      val p = Paths.get(dir, s"f$i.csv")
+      Files.writeString(p, s"a$i,b\n1,2\n")
+      p.toString
+    }
+    paths.foreach { p =>
+      Tables.csv(spark, p, ",", inferSchema = false)
+      assert(Tables.memoSize <= Tables.MemoCap)
+    }
+    assert(Tables.memoSize == Tables.MemoCap)
+    assert(jobsOf("memo-cap-last")(Tables.csv(spark, paths.last, ",", inferSchema = false))._1 == 0)
+    assert(jobsOf("memo-cap-first")(Tables.csv(spark, paths.head, ",", inferSchema = false))._1 >= 1,
+      "the least recently used schema must have been evicted")
+  }
+}
