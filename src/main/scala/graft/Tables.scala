@@ -43,10 +43,23 @@ import org.apache.spark.sql.types.{DateType, DecimalType, LongType, StructType, 
   *    reads only infer the same schema twice. */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // nanos physical type is only readable as long under the legacy conf
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(spark)
     normalizeSchema(parquet(spark, s"$dir/$name.parquet"))
   }
+
+  /** The conf a table read needs: a TIMESTAMP(NANOS) column (the events
+    * table's ts in some testdata generations) reads only as a long under
+    * it. [[graft.Session]] sets it. A read on a session without it fails
+    * here, naming the conf, and leaves the session's confs as they are. */
+  def requireNanosAsLong(spark: SparkSession): Unit = {
+    val v = spark.conf.get(NanosAsLong)
+    if (!v.trim.equalsIgnoreCase("true")) throw new IllegalArgumentException(
+      s"graft's table reads need $NanosAsLong=true (a TIMESTAMP(NANOS) column reads only as a " +
+      s"long under it); this session has '$v'. Build the session with graft.Session, or set " +
+      "the conf before reading.")
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** `spark.read.parquet(path)`, inferring the schema only on the first
     * read of an unchanged source (see the object doc). */
@@ -66,7 +79,7 @@ object Tables {
 
   /** Session confs that change what Parquet schema inference returns. */
   private val ParquetInferConfs: Seq[String] = Seq(
-    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    NanosAsLong, "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema")
 

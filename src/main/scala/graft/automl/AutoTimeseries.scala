@@ -10,7 +10,17 @@ import graft.models._
   * (`auto_ts/__init__.py:48`, fit at 202, predict at 910, leaderboard at
   * 1010). fit() infers frequency and seasonal period, runs the requested
   * model families with expanding-window CV, keeps per-model scores, and
-  * selects the best by mean CV RMSE (`__init__.py:822-870`). */
+  * selects the best by mean CV RMSE (`__init__.py:822-870`).
+  *
+  * Like the reference, which loads one pandas frame and hands it to every
+  * family, fit() reads the series ONCE ([[LocalSeries.read]], one Spark
+  * job, NULLs kept): the frequency (delta of the first two timestamps), n
+  * and the clamped horizon come from that read, and the driver-side
+  * families (Prophet-like, VAR, SARIMAX) fit from it
+  * ([[LocalModelBuild.fitLocal]]), each failing on a NULL in its own
+  * columns. The GBT reads the raw rows into its own one job. A fit of all
+  * four families on a numeric series runs 3 Spark jobs: the read, the
+  * GBT's job and the ARIMA grid's job. */
 /** @param scoreType best-model criterion — "rmse" or "normalized_rmse"
   *                   (reference `score_type` arg, `__init__.py:202`)
   * @param seasonalPeriod explicit seasonal period m; None ⇒ imputed from
@@ -132,8 +142,11 @@ class AutoTimeseries(cv: Int = 2, forecastPeriod: Int = 8,
   def fit(df: DataFrame, tsCol: String, target: String): this.type = {
     val exog = df.columns.filterNot(c => c == tsCol || c == target).toSeq
     val schema = TsSchema(tsCol, target, exog)
-    freq = FreqInfer.inferFromFirstTwo(df, tsCol)
-    val n = df.count()
+    // the fit's one read of the series (NULLs kept): frequency, n and the
+    // local families' series all come from it
+    val series = LocalSeries.read(df, schema)
+    freq = FreqInfer.ofFirstTwo(series.seconds)
+    val n = series.n
     // reference clamp: h >= 5, cv*h <= n (`build_arima_base.py:111-117`)
     val h = graft.cv.ExpandingWindowSplit.clampHorizon(n, math.max(cv, 1), forecastPeriod)
 
@@ -187,7 +200,10 @@ class AutoTimeseries(cv: Int = 2, forecastPeriod: Int = 8,
     }
 
     entries = candidates.flatMap { m =>
-      try Some(Entry(m.name, m, m.fit(df, schema, cv, h)))
+      try Some(Entry(m.name, m, m match {
+        case local: LocalModelBuild => local.fitLocal(series, schema, cv, h)
+        case _ => m.fit(df, schema, cv, h)
+      }))
       catch { case e: Exception =>
         System.err.println(s"[autots] ${m.name} failed: ${e.getMessage}"); None }
     }

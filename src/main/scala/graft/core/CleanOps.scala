@@ -120,7 +120,7 @@ object CleanOps {
       Seq(min(col(c).cast(DoubleType)).as(s"${c}__min"),
           max(col(c).cast(DoubleType)).as(s"${c}__max"))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val row = df.agg(aggs.head, aggs.tail.toSeq: _*).head()
     numeric.map { case (c, isInt) =>
       val lo = Option(row.getAs[java.lang.Double](s"${c}__min")).map(_.toDouble).getOrElse(0.0)
       val hi = Option(row.getAs[java.lang.Double](s"${c}__max")).map(_.toDouble).getOrElse(0.0)

@@ -36,7 +36,7 @@ object TimeSeriesOps {
     val w = seriesWindow(tsCol, seriesCols, tieBreak)
     val lagCols = for (c <- valueCols; i <- 1 to maxLag)
       yield lag(col(c), i).over(w).as(s"${c}_lag$i")
-    df.select(df.columns.map(col) ++ lagCols: _*)
+    df.select(df.columns.toSeq.map(col) ++ lagCols: _*)
   }
 
   /** T2 — lead features `col_lead{i}` for i=1..maxLead (reference
@@ -47,7 +47,7 @@ object TimeSeriesOps {
     val w = seriesWindow(tsCol, seriesCols, tieBreak)
     val leadCols = for (c <- valueCols; i <- 1 to maxLead)
       yield lead(col(c), i).over(w).as(s"${c}_lead$i")
-    df.select(df.columns.map(col) ++ leadCols: _*)
+    df.select(df.columns.toSeq.map(col) ++ leadCols: _*)
   }
 
   /** T1+T2 — the reference's `convert_timeseries_dataframe_to_supervised`

@@ -83,11 +83,16 @@ object FreqInfer {
 
   /** Strict reference parity: delta of the first two ordered timestamps
     * (`auto_ts/__init__.py:402`). */
-  def inferFromFirstTwo(df: DataFrame, tsCol: String): Freq = {
-    val two = df.select(col(tsCol).cast("double"))
-      .orderBy(col(tsCol)).limit(2).collect()
+  def inferFromFirstTwo(df: DataFrame, tsCol: String): Freq =
+    ofFirstTwo(df.select(col(tsCol).cast("double"))
+      .orderBy(col(tsCol)).limit(2).collect().map(_.getDouble(0)))
+
+  /** [[inferFromFirstTwo]] over timestamps already on the driver: the
+    * delta of the two earliest of `seconds` (epoch seconds, any order). */
+  def ofFirstTwo(seconds: Array[Double]): Freq = {
+    val two = seconds.sorted(Ordering.Double.TotalOrdering).take(2)
     require(two.length == 2, s"need >=2 rows to infer frequency")
-    bucket(two(1).getDouble(0) - two(0).getDouble(0))
+    bucket(two(1) - two(0))
   }
 
   /** Robust variant: median of all consecutive deltas (one aggregate job,

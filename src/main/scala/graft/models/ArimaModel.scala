@@ -737,7 +737,7 @@ object ArimaCss {
 /** ModelBuild wrapper: auto-SARIMA (two-stage grid-searched CSS) with
   * expanding CV. `seasonalM` ≤ 1 disables the seasonal stage. */
 class ArimaModel(maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
-                 seasonalM: Int = 1, z: Double = 1.96) extends ModelBuild {
+                 seasonalM: Int = 1, z: Double = 1.96) extends LocalModelBuild {
   val name = "auto_SARIMAX"
 
   private var series: LocalSeries = _
@@ -760,13 +760,13 @@ class ArimaModel(maxP: Int = 3, maxD: Int = 1, maxQ: Int = 3,
     * handles NLP columns instead). CV folds forecast with the ACTUAL
     * in-sample exog of the fold window, the reference's backtest shape
     * (`build_arima_base.py:149-157` passes ts_test's exog at predict). */
-  def fit(df: DataFrame, schema: TsSchema, cv: Int, h: Int): CvScores = {
+  def fitLocal(read: LocalSeries.Read, schema: TsSchema, cv: Int, h: Int): CvScores = {
     val numExog = schema.exog.filter(c =>
-      df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+      read.df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
     tsSchema = schema.copy(exog = numExog)
-    series = LocalSeries.collect(df, tsSchema)
+    series = read.series(tsSchema)
     intervalMs = series.intervalMs
-    val spark = df.sparkSession
+    val spark = read.df.sparkSession
     val xs = xsAll
     val folds = LocalSeries.foldBounds(series.n, cv, h)
     // every fold's search and the full-series search: one Spark job

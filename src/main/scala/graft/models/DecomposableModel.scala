@@ -45,7 +45,7 @@ class DecomposableModel(seasonalPeriod: Int, fourierOrder: Int = 3,
                         seed: Long = 42L,
                         nChangepoints: Int = 0,
                         changepointRange: Double = 0.8,
-                        seasonalityMode: String = "additive") extends ModelBuild {
+                        seasonalityMode: String = "additive") extends LocalModelBuild {
   require(intervalMode == "analytic" || intervalMode == "bootstrap",
     s"intervalMode must be analytic|bootstrap, got $intervalMode")
   require(seasonalityMode == "additive" || seasonalityMode == "multiplicative",
@@ -227,8 +227,8 @@ class DecomposableModel(seasonalPeriod: Int, fourierOrder: Int = 3,
     }
   }
 
-  def fit(df: DataFrame, schema: TsSchema, cv: Int, h: Int): CvScores = {
-    series = LocalSeries.collect(df, schema)
+  def fitLocal(read: LocalSeries.Read, schema: TsSchema, cv: Int, h: Int): CvScores = {
+    series = read.series(schema)
     nExog = schema.exog.size
     tsColName = schema.tsCol
     exogNames = schema.exog

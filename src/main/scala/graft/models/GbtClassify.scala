@@ -211,12 +211,13 @@ object GbtClassify {
 
 /** ModelBuild adapter: time-series CLASSIFICATION (the categorical-target
   * branch of ML mode — `ml_models.py:306-335` + `analyze_problem_type`,
-  * `ml_models.py:570-616`). It runs [[GbtModel]]'s ML core ([[MlCore]]):
-  * the same cached supervised frame — lagged target (as class indices) +
-  * calendar features + exog, NLP exog as bag-of-words — the same fold
-  * runner with one candidate (fold fits and full fit as one concurrent
-  * batch), and the same bounded state and recursive forecast loop, but it
-  * trains [[GbtClassify]] and forecasts over class indices.
+  * `ml_models.py:570-616`). It runs on [[GbtModel]]'s ML core
+  * ([[MlCore]]): one cached supervised frame — lagged target (as class
+  * indices) + calendar features in the session time zone + exog, NLP exog
+  * as bag-of-words — its fold runner (fold fits and full fit as one
+  * concurrent batch of MLlib jobs), and the same bounded state and
+  * recursive forecast loop, but it trains [[GbtClassify]] and forecasts
+  * over class indices.
   *
   * Scoring deviation, documented: CvScores carries the per-fold
   * MISCLASSIFICATION RATE in both slots (an RMSE is meaningless over
@@ -240,20 +241,19 @@ class GbtClassifyTs(lags: Int = 2, maxIter: Int = 30, maxDepth: Int = 4)
     vocab = GbtClassify.labelVocab(df, target)
     val in = MlCore.inputs(df, tsSchema, lags, "lagidx", 50)
     val index = GbtClassify.indexExpr(target, vocab)
-    val (frame, n) = MlCore.frame(df, in, index, Seq(col(target)), assemble = false)
+    val (frame, n) = MlCore.frame(df, in, index, Seq(col(target)))
     def fitOn(p: GbtModel.GbtParams, rows: DataFrame) =
       new GbtClassify(p.maxIter, p.maxDepth, p.stepSize)
         .fit(rows, in.featureCols, target, Some(vocab))
     try {
-      // the one candidate: this model's depth and iterations, GbtClassify's step
-      val (_, scores, fitted) =
-        MlCore.run(n, cv, h, Seq(GbtModel.GbtParams(maxDepth, maxIter, 0.1))) {
-          (p, trainEnd, testEnd) =>
-            // the fold's misclassification rate, in both score slots
-            val err = 1.0 - fitOn(p, MlCore.rows(frame, 0, trainEnd))
-              .accuracy(MlCore.rows(frame, trainEnd, testEnd))
-            (err, err)
-        }(fitOn(_, frame))
+      // this model's depth and iterations, GbtClassify's step
+      val p = GbtModel.GbtParams(maxDepth, maxIter, 0.1)
+      val (scores, fitted) = MlCore.run(n, cv, h) { (trainEnd, testEnd) =>
+        // the fold's misclassification rate, in both score slots
+        val err = 1.0 - fitOn(p, MlCore.rows(frame, 0, trainEnd))
+          .accuracy(MlCore.rows(frame, trainEnd, testEnd))
+        (err, err)
+      }(fitOn(p, frame))
       clf = fitted
       state = MlCore.state(df, in, frame, index)
       scores

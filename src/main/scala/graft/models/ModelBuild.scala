@@ -1,6 +1,6 @@
 package graft.models
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Schema contract for every model (SURVEY §1.3): explicit event-time
   * column, one target, remaining columns exogenous. */
@@ -68,37 +68,99 @@ case class LocalSeries(ts: Array[Long], y: Array[Double], exog: Array[Array[Doub
   def intervalMs: Long = LocalSeries.interval(ts)
 }
 
+/** A family that fits on the driver from a [[LocalSeries.Read]]:
+  * `fit(df, …)` is one [[LocalSeries.read]] (one Spark job) followed by
+  * [[fitLocal]], so [[graft.automl.AutoTimeseries]] can read the series
+  * once and hand the same read to every such family. */
+trait LocalModelBuild extends ModelBuild {
+  /** [[fit]] from a read of the series: takes the family's columns from it
+    * ([[LocalSeries.Read.series]]) and runs no Spark job of its own, apart
+    * from any compute fan-out the family does. */
+  def fitLocal(series: LocalSeries.Read, schema: TsSchema, cv: Int, h: Int): CvScores
+
+  final def fit(df: DataFrame, schema: TsSchema, cv: Int, h: Int): CvScores =
+    fitLocal(LocalSeries.read(df, schema), schema, cv, h)
+}
+
 object LocalSeries {
   import org.apache.spark.sql.functions._
 
-  /** Collect one bounded series to the driver, ordered by time, through
-    * [[byTime]]. Deliberately mirrors the reference contract (pandas
-    * in-memory); the many-series scale path goes through flatMapGroups
-    * instead. */
-  def collect(df: DataFrame, schema: TsSchema): LocalSeries = {
-    val rows = byTime(df, schema.tsCol, schema.target +: schema.exog)
-    LocalSeries(rows.map(_._1), rows.map(_._2(0)), rows.map(_._2.drop(1)))
+  /** One collect of a bounded series frame: per row, in collect order,
+    * the epoch seconds of `tsCol` (`cast("timestamp").cast("double")`)
+    * and each of `cols` cast to double. NULLs stay in the rows, so each
+    * reader checks only the columns it uses: a Row's null bits are the
+    * per-column NULL mask. `df` is kept for a column the read did not
+    * cast ([[series]]). */
+  final class Read(val df: DataFrame, val tsCol: String, cols: Seq[String],
+                   rows: Array[Row]) {
+    def n: Int = rows.length
+
+    /** Fails naming the first of `idx` (row positions, 0 = the ts) that
+      * is NULL in `r`. */
+    private def requireValues(r: Row, idx: Seq[Int], names: Seq[String]): Unit =
+      idx.indices.find(i => r.isNullAt(idx(i))).foreach { i =>
+        throw new IllegalArgumentException(s"column '${names(i)}' has a NULL value (or one that " +
+          s"does not cast to ${if (idx(i) == 0) "a timestamp" else "double"}); a local model " +
+          "needs a value in every row")
+      }
+
+    /** The epoch seconds of every row; a NULL fails naming `tsCol`. */
+    def seconds: Array[Double] = rows.map { r =>
+      requireValues(r, Seq(0), Seq(tsCol)); r.getDouble(0)
+    }
+
+    /** (epoch ms of `tsCol`, `use` as doubles) per row, in time order (a
+      * stable sort by epoch ms). Every `use` column must be one of the
+      * read's; a NULL in the ts or a `use` column fails naming it, the
+      * first such row in collect order first. */
+    private[models] def byTime(use: Seq[String]): Array[(Long, Array[Double])] = {
+      val idx = 0 +: use.map(c => 1 + cols.indexOf(c))
+      rows.map { r =>
+        requireValues(r, idx, tsCol +: use)
+        ((r.getDouble(0) * 1000).toLong, Array.tabulate(use.size)(i => r.getDouble(idx(i + 1))))
+      }.sortBy(_._1)
+    }
+
+    /** The [[LocalSeries]] of `schema`'s target and exog. A column this
+      * read did not cast (a non-numeric one) is read again through
+      * [[collect]], so it fails or casts exactly as a one-family fit does. */
+    def series(schema: TsSchema): LocalSeries = {
+      val use = schema.target +: schema.exog
+      if (schema.tsCol != tsCol || !use.forall(cols.contains)) collect(df, schema)
+      else {
+        val rows = byTime(use)
+        LocalSeries(rows.map(_._1), rows.map(_._2(0)), rows.map(_._2.drop(1)))
+      }
+    }
   }
 
+  /** `df`'s rows read ONCE (one Spark job, a plain collect of the bounded
+    * frame; ordering happens on the driver, where a Spark `orderBy` would
+    * add range-partition sampling jobs): the timestamp and `cols`, with
+    * NULLs kept. */
+  def read(df: DataFrame, tsCol: String, cols: Seq[String]): Read =
+    new Read(df, tsCol, cols, df.select(col(tsCol).cast("timestamp").cast("double") +:
+      cols.map(c => col(c).cast("double")): _*).collect())
+
+  /** The read a local family fits from: the timestamp and the numeric
+    * columns among `schema`'s target and exog (a cast that cannot fail). */
+  def read(df: DataFrame, schema: TsSchema): Read =
+    read(df, schema.tsCol, (schema.target +: schema.exog).filter(c => df.schema.exists(f =>
+      f.name == c && f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])))
+
+  /** Collect one bounded series to the driver, ordered by time, in one
+    * Spark job ([[read]]). Deliberately mirrors the reference contract
+    * (pandas in-memory); the many-series scale path goes through
+    * flatMapGroups instead. A NULL, or a value that does not cast, fails
+    * with an `IllegalArgumentException` naming its column. */
+  def collect(df: DataFrame, schema: TsSchema): LocalSeries =
+    read(df, schema.tsCol, schema.target +: schema.exog).series(schema)
+
   /** `df`'s rows as (epoch ms of `tsCol`, `cols` cast to double), in time
-    * order. ONE Spark job: a plain collect of the bounded frame, then a
-    * stable sort by epoch ms on the driver (a Spark `orderBy` would add
-    * range-partition sampling jobs). A NULL, or a value that does not
-    * cast, fails with an `IllegalArgumentException` naming its column. */
+    * order, in one Spark job; NULLs fail as in [[collect]]. */
   private[models] def byTime(df: DataFrame, tsCol: String,
-                             cols: Seq[String]): Array[(Long, Array[Double])] = {
-    val names = tsCol +: cols
-    val rows = df.select(col(tsCol).cast("timestamp").cast("double") * 1000 +:
-                         cols.map(c => col(c).cast("double")): _*).collect()
-    rows.map { r =>
-      names.indices.find(r.isNullAt).foreach { i =>
-        throw new IllegalArgumentException(s"column '${names(i)}' has a NULL value (or one that " +
-          s"does not cast to ${if (i == 0) "a timestamp" else "double"}); a local model needs a " +
-          "value in every row")
-      }
-      (r.getDouble(0).toLong, Array.tabulate(cols.size)(i => r.getDouble(1 + i)))
-    }.sortBy(_._1)
-  }
+                             cols: Seq[String]): Array[(Long, Array[Double])] =
+    read(df, tsCol, cols).byTime(cols)
 
   /** The step every family forecasts with: ts(1) − ts(0) of a time-ordered
     * series, one day when it has fewer than two points. */

@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are the standard VARX deterministic-seasonality treatment and extend
   * exactly into the forecast horizon. */
 class VarModel(maxP: Int = 3, minP: Int = 1, seasonalM: Int = 1,
-               z: Double = 1.96) extends ModelBuild {
+               z: Double = 1.96) extends LocalModelBuild {
   val name = "VAR"
 
   private var series: LocalSeries = _
@@ -122,9 +122,9 @@ class VarModel(maxP: Int = 3, minP: Int = 1, seasonalM: Int = 1,
     }.toArray
   }
 
-  def fit(df: DataFrame, schema: TsSchema, cv: Int, h: Int): CvScores = {
+  def fitLocal(read: LocalSeries.Read, schema: TsSchema, cv: Int, h: Int): CvScores = {
     require(schema.exog.nonEmpty, "VAR needs at least one companion column (reference rejects univariate VAR)")
-    series = LocalSeries.collect(df, schema)
+    series = read.series(schema)
     dim = 1 + schema.exog.size
     intervalMs = series.intervalMs
     val z = zRows(series.y, series.exog)

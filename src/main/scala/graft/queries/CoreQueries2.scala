@@ -532,7 +532,7 @@ object CoreQueries2 {
     import graft.models.NlpFeatures
     val docs = Tables.documents(s, d)
     val vocab = NlpFeatures.vocabulary(docs, "text", 10)
-    val vocabArr = array(vocab.map(lit): _*)
+    val vocabArr = array(vocab.toSeq.map(lit): _*)
     NlpFeatures.withBow(docs, "text", vocab, "bow")
       .select(col("doc_id"),
         posexplode(org.apache.spark.ml.functions.vector_to_array(col("bow"))))

@@ -1,5 +1,7 @@
 package graft.scale
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -110,7 +112,8 @@ object ProductQuant {
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val w = cbs(0)(0).length
     val luts: Map[Long, Array[Array[Long]]] = qVecs.map { case (qid, qv) =>
-      qid -> Array.tabulate(m)(s => cbs(s).map(cw => subDist9(qv, s * w, cw)))
+      val q = ArraySeq.unsafeWrapArray(qv)
+      qid -> Array.tabulate(m)(s => cbs(s).map(cw => subDist9(q, s * w, cw)))
     }.toMap
     val bc = spark.sparkContext.broadcast(luts)
     // exact 1e-9-grid ADC total: the ranking key (ties broken by vid)
@@ -170,7 +173,8 @@ object ProductQuant {
     }
     val w = cbs(0)(0).length
     val luts: Map[Long, Array[Array[Long]]] = qVecs.map { case (qid, qv) =>
-      qid -> Array.tabulate(m)(s => cbs(s).map(cw => subDist9(qv, s * w, cw)))
+      val q = ArraySeq.unsafeWrapArray(qv)
+      qid -> Array.tabulate(m)(s => cbs(s).map(cw => subDist9(q, s * w, cw)))
     }.toMap
     val bc = spark.sparkContext.broadcast(luts)
     // rank on the exact 1e-9-grid total (see pqTopK) — rounded adist is

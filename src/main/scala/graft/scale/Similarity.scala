@@ -1,5 +1,7 @@
 package graft.scale
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -259,7 +261,7 @@ object Similarity {
                                     iters: Int = 3): (Array[Array[Double]], Array[Array[Int]]) = {
     val dim = cents.map(_.length).max
     var groups = Array.tabulate(nGroups)(g => java.util.Arrays.copyOf(cents(g), dim))
-    var assign = cents.map(c => bestCell(c, groups, null))
+    var assign = cents.map(c => bestCell(ArraySeq.unsafeWrapArray(c), groups, null))
     var it = 0
     while (it < iters) {
       val sums = Array.fill(nGroups)(new Array[Double](dim))
@@ -277,7 +279,7 @@ object Similarity {
                var j = 0
                while (j < dim) { out(j) = s(j) / cnts(g); j += 1 }; out }
       }
-      assign = cents.map(c => bestCell(c, groups, null))
+      assign = cents.map(c => bestCell(ArraySeq.unsafeWrapArray(c), groups, null))
       it += 1
     }
     val members = Array.fill(nGroups)(scala.collection.mutable.ArrayBuffer.empty[Int])

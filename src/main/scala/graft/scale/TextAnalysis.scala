@@ -139,7 +139,7 @@ object TextAnalysis {
                   CASE WHEN size(g.tri) > 0 THEN
                     1.0 - CAST(size(array_distinct(g.tri)) AS DOUBLE) / size(g.tri)
                   ELSE 0.0 END)), 1)))"""
-    df.drop(clash: _*).select(col("*"), expr(gen))
+    df.drop(clash.toSeq: _*).select(col("*"), expr(gen))
       .withColumn("keep",
         (col("top_bigram_frac") <= maxTopBigram) &&
         (col("dup_trigram_frac") <= maxDupTrigram))
@@ -216,7 +216,7 @@ object TextAnalysis {
       val list = words.map(s => s"'$s'").mkString(", ")
       expr(s"size(filter(split(lower($textCol), ' '), x -> x IN ($list)))").as(s"hits_$lang")
     }
-    val withHits = df.select((df.columns.map(col) ++ hitCols): _*)
+    val withHits = df.select((df.columns.toSeq.map(col) ++ hitCols): _*)
     val langs = stopwordLists.keys.toSeq.sorted
     // argmax with (hits desc, lang asc) tie-break via array_min of structs
     withHits.withColumn("pred_lang", expr(

@@ -45,7 +45,7 @@ object IncrementalAgg {
     val all = parts.reduce(_ unionByName _)
     val keyCols = all.columns.filterNot(
       Set("cnt", "sum6", "min6", "max6", "hll"))
-    all.groupBy(keyCols.map(col): _*)
+    all.groupBy(keyCols.toSeq.map(col): _*)
       .agg(sum(col("cnt")).as("cnt"),
            sum(col("sum6")).as("sum6"),
            min(col("min6")).as("min6"),

@@ -38,7 +38,7 @@ object EventWindows {
     * local smoke harness for what runs against Kafka/files in prod). */
   def tumblingStreaming(spark: SparkSession, sfDir: String,
                         windowLen: String = "1 hour"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.requireNanosAsLong(spark)
     // the file stream source needs a DIRECTORY; select just the events
     // table out of the shared sf dir with a glob filter
     val stream = graft.Tables.normalizeEventTs(spark.readStream

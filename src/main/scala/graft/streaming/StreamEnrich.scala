@@ -31,7 +31,7 @@ object StreamEnrich {
     * with AvailableNow and returns the completed result table (local
     * harness for what runs continuously against Kafka/files in prod). */
   def enrichStreaming(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.requireNanosAsLong(spark)
     val schema = graft.Tables.parquet(spark, s"$sfDir/events.parquet").schema
     val raw = spark.readStream
       .schema(schema)

@@ -1,5 +1,6 @@
 package graft.models
 
+import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.graftbridge.TreeBridge
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
@@ -66,9 +67,10 @@ class GbtTrainerSpec extends SparkTestBase {
   private lazy val series: (Array[Vector], Array[Double]) = {
     val df = spark.read.parquet("perfbench/fixtures/orders_monthly.parquet")
     val in = MlCore.inputs(df, TsSchema("ts", "price", Seq("n_orders")), 2, "price_lag", 50)
-    val (f, _) = MlCore.frame(df, in, col("price"), Seq(col("price").as("label")), assemble = true)
+    val (f, _) = MlCore.frame(df, in, col("price"), Seq(col("price").as("label")))
     try {
-      val rows = f.orderBy("rn").select("features", "label").collect()
+      val rows = new VectorAssembler().setInputCols(in.featureCols.toArray).setOutputCol("features")
+        .transform(f).orderBy("rn").select("features", "label").collect()
       (rows.map(_.getAs[Vector](0)), rows.map(_.getDouble(1)))
     } finally f.unpersist()
   }

@@ -924,10 +924,10 @@ class ModelsSpec extends SparkTestBase {
       s"driver-bound bytes grow with n: $small at n=60, $large at n=960")
   }
 
-  test("GbtModel fit: each fold fit and the full fit is one Spark job, a handful in all") {
+  test("GbtModel fit: the fold fits and the full fit are one Spark job") {
     val (jobs, _) = jobsOf("gbt-job-count")(
       new GbtModel(lags = 2).fit(sawtooth, TsSchema("ts", "y"), cv = 2, h = 6))
-    assert(jobs <= 12, s"$jobs Spark jobs for one fit with cv = 2")
+    assert(jobs == 1, s"$jobs Spark jobs for one fit with cv = 2")
   }
 
   test("GbtModel on a series too short for its lags fails with a named error") {
@@ -1130,6 +1130,17 @@ class ModelsSpec extends SparkTestBase {
     }
   }
 
+  test("AutoTimeseries.fit reads the series once: at most 3 Spark jobs over all four families") {
+    val df = monthly
+    var at: AutoTimeseries = null
+    val (jobs, _) = jobsOf("automl-fit-jobs") {
+      at = new AutoTimeseries(cv = 2, forecastPeriod = 8).fit(df, "ts", "price")
+    }
+    assert(at.models.keySet == Set("ML", "Prophet", "VAR", "auto_SARIMAX"))
+    // the series collect, the GBT's job and the ARIMA grid's job
+    assert(jobs <= 3, s"$jobs Spark jobs for one AutoTimeseries.fit")
+  }
+
   test("VarModel.fit and DecomposableModel.fit collect the series in one job") {
     val df = monthly
     for (mb <- Seq(new VarModel(seasonalM = 12), new DecomposableModel(seasonalPeriod = 12))) {
@@ -1263,6 +1274,21 @@ class ModelsSpec extends SparkTestBase {
         org.apache.spark.sql.Row.fromSeq(r.toSeq.updated(i, if (t == 30) null else r.get(i)))
       }: _*),
       org.apache.spark.sql.types.StructType(df.schema.map(_.copy(nullable = true))))
+  }
+
+  test("AutoTimeseries.fit: a NULL timestamp is a named error, a NULL target or exog drops the families that read it") {
+    val e = intercept[IllegalArgumentException](
+      new AutoTimeseries(cv = 2, forecastPeriod = 8).fit(withNull("ts"), "ts", "y"))
+    assert(e.getMessage.contains("column 'ts' has a NULL value"), e.getMessage)
+    // the GBT drops the rows a NULL reaches; the local families fail on
+    // their own columns and leave the leaderboard (values as before the
+    // series was read once per fit)
+    for ((c, board) <- Seq("y" -> ("ML", 9.384711235302127, 1.08851628278897),
+                           "x" -> ("ML", 9.303274683239849, 1.03480306548429))) {
+      val at = new AutoTimeseries(cv = 2, forecastPeriod = 8).fit(withNull(c), "ts", "y")
+      val got = at.leaderboard(spark).collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
+      assert(got.toSeq == Seq(board), s"NULL $c: ${got.toSeq}")
+    }
   }
 
   // VAR forecasts its exog itself and reads no future frame

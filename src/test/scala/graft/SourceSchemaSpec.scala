@@ -80,6 +80,22 @@ class SourceSchemaSpec extends SparkTestBase {
     secondRead("memo-nanos-on")(Tables.parquet(spark, path))
   }
 
+  test("a table read on a session without nanosAsLong fails naming the conf and leaves it unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    try {
+      spark.conf.set(key, "false")
+      val reads: Seq[(String, () => Any)] = Seq(
+        "Tables.t" -> (() => Tables.t(spark, SF, "events")),
+        "tumblingStreaming" -> (() => graft.streaming.EventWindows.tumblingStreaming(spark, SF)),
+        "enrichStreaming" -> (() => graft.streaming.StreamEnrich.enrichStreaming(spark, SF)))
+      for ((tag, read) <- reads) {
+        val e = intercept[IllegalArgumentException](read())
+        assert(e.getMessage.contains(key) && e.getMessage.contains("graft.Session"), s"$tag: ${e.getMessage}")
+        assert(spark.conf.get(key) == "false", s"$tag changed the session's conf")
+      }
+    } finally spark.conf.set(key, "true")
+  }
+
   test("DATE and DECIMAL columns: a memo hit normalizes to the same schema and rows") {
     val dir = tmp("graft-memo-orders")
     Seq((1L, "2024-01-02", "10.25"), (2L, "2024-02-03", "7.50"))
