@@ -1,10 +1,11 @@
 package graft
 
+import java.lang.ref.SoftReference
 import java.security.MessageDigest
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DecimalType, LongType, StructType, TimestampNTZType}
@@ -19,32 +20,61 @@ import org.apache.spark.sql.types.{DateType, DecimalType, LongType, StructType, 
   * correctness run — if a future regeneration drifts further.
   *
   * Every file read in the program that needs Spark to work out a schema
-  * goes through [[parquet]] or [[csv]], which remember the schema Spark
-  * inferred for a source (SourceReadGuardSpec enforces this). Inferring
-  * a Parquet schema is a distributed footer-merge job even for one file
-  * (about 0.1 s warm on 4 cores), and an inferring CSV read is two jobs;
-  * with the remembered schema the read runs none, and file listing and
-  * planning are unchanged.
-  *  - What is memoized: only the schema Spark's own inferring read
-  *    returned the first time a source was read, before
-  *    [[normalizeSchema]] (which still applies on top).
-  *  - The key: the qualified path, a digest of its leaf-file listing
-  *    (each file's path, length and modification time), and the session
-  *    confs that steer inference ([[ParquetInferConfs]], and for CSV the
-  *    sep and inferSchema options plus [[CsvInferConfs]]).
-  *    Rewriting a source changes its listing, so the next read infers
-  *    again; so does changing one of those confs.
-  *  - A path that cannot be listed (missing, or a glob) takes Spark's
-  *    plain inferring read, so it fails or resolves exactly as before.
+  * goes through [[t]], [[parquet]] or [[csv]] (SourceReadGuardSpec
+  * enforces this). Two memos sit behind them, both keyed by one listing
+  * of the source per call: the qualified path and a digest of its
+  * leaf-file listing (each file's path, length and modification time).
+  * Rewriting a source changes its listing, so the next read misses both.
+  *
+  * The frame memo: an unchanged source read again the same way, in the
+  * same session under the same confs, returns the very `DataFrame` the
+  * first read built (for [[t]], the normalized one). So the read repeats
+  * none of Spark's work: no second listing, no data-source resolution, no
+  * re-analysis, and the frame keeps its expression IDs, so plans built on
+  * it hit the codegen cache (a second `ColumnClassifier.classifyTable` of
+  * a table compiles no class). On perfbench's fixtures (4 cores) a warm
+  * `t(…, "events")` went from 21.9 to 0.75 ms (median of 40), the median
+  * build of a one-table query such as `t1_lag` from 24 to 7.5 ms, and
+  * `i1_classify`'s from 396 to 171 ms.
+  *  - The key: the listing, the read's kind and options, and every conf
+  *    set on the session (`spark.conf.getAll`) — the session time zone,
+  *    ANSI mode and case sensitivity are fixed into an analyzed plan, so
+  *    a conf change misses.
+  *  - Ownership: one memo per session, at most [[MemoCap]] frames, least
+  *    recently used evicted. Sessions are weak keys and frames are held
+  *    softly (a frame references its session, so a strong frame would pin
+  *    its key); a stopped session's frames are dropped at the next read.
+  *    Streaming reads are not memoized.
+  *  - The caveat: two loads of one table are now the same frame with the
+  *    same expression IDs, so a join of them is a self-join. An equality
+  *    of Dataset-bound refs (`a.join(b, a("k") === b("k"))`) still
+  *    resolves to both sides (Spark's self-join rule), but a Dataset-bound
+  *    ref that cannot tell the sides apart (`.select(b("v"))` after that
+  *    join) fails with Spark's ambiguous self-join error. Join on names
+  *    (`Seq("k")`) or alias the sides (`a.as("l")`, `col("l.k")`).
+  *
+  * The schema memo, on a frame miss: the schema Spark's own inferring
+  * read returned the first time a source was read (before
+  * [[normalizeSchema]]). Inferring a Parquet schema is a distributed
+  * footer-merge job even for one file (about 0.1 s warm on 4 cores), and
+  * an inferring CSV read is two; with the remembered schema the read runs
+  * none.
+  *  - The key: the listing and the session confs that steer inference
+  *    ([[ParquetInferConfs]], and for CSV the sep and inferSchema options
+  *    plus [[CsvInferConfs]]).
   *  - The cap: at most [[MemoCap]] schemas, least recently used evicted.
-  *  - Ownership: one memo per JVM, held here and shared by every session
-  *    (the key carries the session confs that matter). No lock is held
-  *    while a Spark job runs — a get, then a put — so two racing first
-  *    reads only infer the same schema twice. */
+  *  - Ownership: one memo per JVM, shared by every session (the key
+  *    carries the session confs that matter).
+  *
+  * A path that cannot be listed (missing, or a glob) takes Spark's plain
+  * inferring read, so it fails or resolves exactly as before, and nothing
+  * is remembered. No lock is held while Spark works — a get, then a put —
+  * so two racing first reads only do the same work twice. */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     requireNanosAsLong(spark)
-    normalizeSchema(parquet(spark, s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    memoRead(spark, path, "t", parquetKey(spark))(_.parquet(path), normalizeSchema)
   }
 
   /** The conf a table read needs: a TIMESTAMP(NANOS) column (the events
@@ -61,21 +91,25 @@ object Tables {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** `spark.read.parquet(path)`, inferring the schema only on the first
-    * read of an unchanged source (see the object doc). */
+  /** `spark.read.parquet(path)`, resolved once per unchanged source and
+    * inferring the schema only on the first read (see the object doc). */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    memoRead(spark, path, "parquet" +: ParquetInferConfs.map(confOf(spark, _)))(
-      _.parquet(path))
+    memoRead(spark, path, "parquet", parquetKey(spark))(_.parquet(path))
 
-  /** `spark.read.csv(path)` of a file with a header line, inferring the
-    * schema (the column types, or with `inferSchema` off the header's
-    * column names) only on the first read of an unchanged source. */
+  /** `spark.read.csv(path)` of a file with a header line, resolved once
+    * per unchanged source and inferring the schema (the column types, or
+    * with `inferSchema` off the header's column names) only on the first
+    * read. */
   def csv(spark: SparkSession, path: String, sep: String,
-          inferSchema: Boolean = true): DataFrame =
-    memoRead(spark, path,
-             Seq("csv", sep, inferSchema.toString) ++ CsvInferConfs.map(confOf(spark, _)))(
+          inferSchema: Boolean = true): DataFrame = {
+    val opts = Seq("csv", sep, inferSchema.toString)
+    memoRead(spark, path, opts.mkString("\u0000"), opts ++ CsvInferConfs.map(confOf(spark, _)))(
       _.option("header", "true").option("sep", sep)
         .option("inferSchema", inferSchema.toString).csv(path))
+  }
+
+  private def parquetKey(spark: SparkSession): Seq[String] =
+    "parquet" +: ParquetInferConfs.map(confOf(spark, _))
 
   /** Session confs that change what Parquet schema inference returns. */
   private val ParquetInferConfs: Seq[String] = Seq(
@@ -88,43 +122,77 @@ object Tables {
     "spark.sql.session.timeZone", "spark.sql.timestampType",
     "spark.sql.legacy.timeParserPolicy")
 
-  /** Most schemas the memo holds. */
+  /** Most entries each memo holds (schemas per JVM, frames per session). */
   private[graft] val MemoCap = 64
 
-  private val schemaMemo =
-    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, StructType]): Boolean =
-        size() > MemoCap
-    }
+  /** An access-ordered map that drops its least recently used entry past [[MemoCap]]. */
+  private final class Lru[K, V] extends java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size() > MemoCap
+  }
+
+  private val schemaMemo = new Lru[String, StructType]
+
+  /** A frame's key: the listing, the read's kind and options, the session's confs. */
+  private type FrameKey = (String, String, Map[String, String])
+
+  private val frameMemo =
+    new java.util.WeakHashMap[SparkSession, Lru[FrameKey, SoftReference[DataFrame]]]
 
   /** Schemas held now (for tests of the cap). */
   private[graft] def memoSize: Int = schemaMemo.synchronized(schemaMemo.size())
 
+  /** Frames held now for `spark` (for tests of the cap). */
+  private[graft] def frameMemoSize(spark: SparkSession): Int = frameMemo.synchronized(
+    Option(frameMemo.get(spark)).fold(0)(_.size()))
+
   private def confOf(spark: SparkSession, key: String): String =
     spark.conf.getOption(key).getOrElse("")
 
-  private def memoRead(spark: SparkSession, path: String, conf: Seq[String])(
-      load: DataFrameReader => DataFrame): DataFrame =
+  /** `finish(load(reader))`, through the frame memo and, on a miss, the
+    * schema memo; `kind` names the read and its options, `inferKey` the
+    * schema memo's part of the key besides the listing. */
+  private def memoRead(spark: SparkSession, path: String, kind: String, inferKey: Seq[String])(
+      load: DataFrameReader => DataFrame,
+      finish: DataFrame => DataFrame = identity): DataFrame =
     listing(spark, path) match {
-      case None => load(spark.read)
+      case None => finish(load(spark.read))
       case Some(files) =>
-        val key = (files +: conf).mkString("\u0000")
-        schemaMemo.synchronized(Option(schemaMemo.get(key))) match {
-          case Some(schema) => load(spark.read.schema(schema))
-          case None =>
-            val df = load(spark.read)
-            schemaMemo.synchronized(schemaMemo.put(key, df.schema))
-            df
+        val key: FrameKey = (files, kind, spark.conf.getAll)
+        val hit = frameMemo.synchronized {
+          frameMemo.keySet.removeIf(_.sparkContext.isStopped)
+          Option(frameMemo.get(spark)).flatMap(m => Option(m.get(key))).flatMap(r => Option(r.get))
+        }
+        hit.getOrElse {
+          val df = finish(schemaRead(spark, (files +: inferKey).mkString("\u0000"), load))
+          frameMemo.synchronized(
+            frameMemo.computeIfAbsent(spark, _ => new Lru).put(key, new SoftReference(df)))
+          df
         }
     }
 
+  /** `load`, with the schema remembered under `key` if there is one. */
+  private def schemaRead(spark: SparkSession, key: String,
+                         load: DataFrameReader => DataFrame): DataFrame =
+    schemaMemo.synchronized(Option(schemaMemo.get(key))) match {
+      case Some(schema) => load(spark.read.schema(schema))
+      case None =>
+        val df = load(spark.read)
+        schemaMemo.synchronized(schemaMemo.put(key, df.schema))
+        df
+    }
+
   /** The qualified path plus a SHA-256 of its leaf files' paths, lengths
-    * and modification times; None when it cannot be listed. */
-  private def listing(spark: SparkSession, path: String): Option[String] = Try {
+    * and modification times; None when it cannot be listed. The leaves
+    * come from a recursive `listStatus`: `listFiles` wraps each file in a
+    * `LocatedFileStatus`, whose permission read forks `ls -ld` per file on
+    * a local file system without Hadoop's native library (2.5–2.8 ms for
+    * a one-file source, against 0.07–0.12 ms with `listStatus`). */
+  private[graft] def listing(spark: SparkSession, path: String): Option[String] = Try {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+    def leaves(s: FileStatus): Iterator[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).iterator.flatMap(leaves) else Iterator(s)
+    val files = fs.listStatus(p).iterator.flatMap(leaves)
       .map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}").toVector.sorted
     val sha = MessageDigest.getInstance("SHA-256")
     files.foreach(f => sha.update((f + "\n").getBytes("UTF-8")))

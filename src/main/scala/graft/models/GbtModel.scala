@@ -37,10 +37,17 @@ private[models] object MlCore {
   val Calendar = Seq("f_month", "f_quarter", "f_dow", "f_dom")
 
   /** Calendar features in Spark for [[frame]]: month, quarter, day of week
-    * (0 = Monday), day of month, in the session time zone. */
-  def calendarCols(tsCol: String): Seq[Column] =
-    Seq(month(col(tsCol)), quarter(col(tsCol)), weekday(col(tsCol)), dayofmonth(col(tsCol)))
+    * (0 = Monday), day of month, in UTC whatever the session time zone, as
+    * [[calendarLocal]] computes them for the forecast. The instant's UTC
+    * day comes from its epoch microseconds (a floor division), and the
+    * date functions of a DATE read no time zone. */
+  def calendarCols(tsCol: String): Seq[Column] = {
+    val us = unix_micros(col(tsCol).cast("timestamp"))
+    val dayUs = lit(86400000000L)
+    val day = date_from_unix_date(((us - pmod(us, dayUs)) / dayUs).cast("int"))
+    Seq(month(day), quarter(day), weekday(day), dayofmonth(day))
       .zip(Calendar).map { case (c, n) => c.cast("double").as(n) }
+  }
 
   /** The calendar features of an instant in UTC: [[GbtModel]]'s training
     * rows ([[supervised]]) and every forecast step read this one function. */

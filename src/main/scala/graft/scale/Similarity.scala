@@ -521,7 +521,7 @@ object Similarity {
     // n·(1e6·max|x|)² < 9.2e18, i.e. ~9M rows of unit-scale coordinates
     // (pre-scale or shard the sum beyond that). The envelope is ENFORCED
     // below: each (i,j) aggregate also tracks max|p| and the covariance
-    // nulls out when n·max|p| could have wrapped a partial sum.
+    // nulls out when n·max|p| could have overflowed a partial sum.
     val q = df.select(col(vecCol).cast("array<double>").as("e"))
       .filter(size(col("e")) === d)
       .select(expr(
@@ -534,30 +534,32 @@ object Similarity {
         "* CAST(0.000001 AS DECIMAL(7,6)) AS DOUBLE)").as("s"))
     // ENVELOPE GUARD (ADVICE r15): the BIGINT pair sums are exact only
     // while every partial sum stays under 2^63 — |Σ p| ≤ n·max|p|, so
-    // tracking max(abs(p)) in the same codegen buffer (one extra compare
-    // per row) bounds every partial exactly. Outside the envelope the
-    // covariance is emitted as NULL — fail-to-null, never a silently
-    // wrapped value. (The per-row product itself wraps only at
-    // |x| > ~3034 — 3 orders of magnitude past any normalized embedding;
-    // the enforced guard covers the realistic failure, large n. The
-    // 9.0e18 literal sits 2.4% under 2^63 to absorb the double-compare
-    // rounding.)
+    // tracking max|p| in the same codegen buffer (one extra compare per
+    // row) bounds every partial exactly. Outside the envelope the
+    // covariance is emitted as NULL — fail-to-null, never a wrapped value
+    // and never Spark's ARITHMETIC_OVERFLOW under ANSI: the product (past
+    // |x| ≈ 3034) and the sum (past n·max|p| ≈ 2^63) are the try_ forms,
+    // NULL on overflow, and an overflowed product reads as BIGINT's max,
+    // so its max|p| fails the guard (a NULL coordinate still gives a NULL
+    // product, skipped as before). The 9.0e18 literal sits 2.4% under
+    // 2^63 to absorb the double-compare rounding.
     val pairs = q.select(explode(expr(
         s"flatten(transform(sequence(1, $d), i -> " +
         s"transform(sequence(i, $d), j -> named_struct('i', i, 'j', j, " +
-        s"'p', element_at(q, i) * element_at(q, j)))))"))
+        s"'p', coalesce(try_multiply(element_at(q, i), element_at(q, j)), " +
+        s"IF(element_at(q, i) IS NULL OR element_at(q, j) IS NULL, NULL, 9223372036854775807L))))))"))
         .as("t"))
       .select(col("t.i").as("i"), col("t.j").as("j"), col("t.p").as("p"))
       .groupBy(col("i"), col("j"))
-      .agg(expr("CAST(CAST(sum(p) AS DECIMAL(20,0)) " +
+      .agg(expr("CAST(CAST(try_sum(p) AS DECIMAL(20,0)) " +
         "* CAST(0.000000000001 AS DECIMAL(13,12)) AS DOUBLE)").as("sp"),
-        max(abs(col("p"))).as("mxp"))
+        max(abs(col("p").cast("double"))).as("mxp"))
     pairs
       .join(broadcast(marg.select(col("i"), col("s").as("si"))), Seq("i"))
       .join(broadcast(marg.select(col("i").as("j"), col("s").as("sj"))), Seq("j"))
       .crossJoin(broadcast(nDf))
       .select(col("i"), col("j"),
-        when(col("n").cast("double") * col("mxp").cast("double") < 9.0e18,
+        when(col("n").cast("double") * col("mxp") < 9.0e18,
           col("sp") / col("n") -
           (col("si") / col("n")) * (col("sj") / col("n"))).as("cov"))
   }

@@ -219,4 +219,24 @@ class GbtParitySpec extends SparkTestBase {
     assert(spark.conf.get(key) == "UTC")
     assert(saved(0) == saved(1), "the fit depends on the session time zone")
   }
+
+  test("under a non-UTC session zone the classifier's training calendar is calendarLocal of the same instants") {
+    // GbtClassifyTs trains on MlCore.frame, and forecasts with calendarLocal
+    val df = localMonthly(ZoneId.of("Asia/Tokyo"))
+    val key = "spark.sql.session.timeZone"
+    spark.conf.set(key, "Asia/Tokyo")
+    try {
+      val (f, n) = MlCore.frame(df, inputs(df, TsSchema("ts", "y")), col("y"), Seq(col("y")))
+      try {
+        val rows = f.orderBy("rn").select(unix_micros(col("ts")) +: MlCore.Calendar.map(col): _*).collect()
+        assert(n == 38 && rows.length == n)
+        for ((r, i) <- rows.zipWithIndex)
+          assert((1 to 4).map(r.getDouble) == MlCore.calendarLocal(r.getLong(0) / 1000L).toSeq,
+            s"row ${i + 1}")
+        // 1 March 2015 at midnight in Tokyo is 28 February in UTC
+        assert((1 to 4).map(rows.head.getDouble) == Seq(2.0, 1.0, 5.0, 28.0))
+      } finally f.unpersist()
+    } finally spark.conf.set(key, "UTC")
+    assert(spark.conf.get(key) == "UTC")
+  }
 }

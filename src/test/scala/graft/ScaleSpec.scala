@@ -799,6 +799,30 @@ class ScaleSpec extends SparkTestBase {
     assert(e.getMessage.contains("exactness envelope"), e.getMessage)
   }
 
+  /** Under ANSI (Spark's default, which graft.Session keeps) an overflow
+    * of the BIGINT sums must still reach the fail-to-null guard: a NULL
+    * covariance, and pcaWhiten's named error, not ARITHMETIC_OVERFLOW. */
+  private def assertEnvelopeError(vecs: org.apache.spark.sql.DataFrame): Unit = {
+    assert(spark.conf.get("spark.sql.ansi.enabled").toBoolean, "the case needs ANSI mode")
+    assert(Similarity.covarianceMoments(vecs, "embedding").filter(col("cov").isNull).count() > 0)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.pcaWhiten(vecs, "embedding", "vec_id", 1)
+    }
+    assert(e.getMessage.contains("exactness envelope"), e.getMessage)
+  }
+
+  test("pcaWhiten: a BIGINT pair sum past 2^63 under ANSI is the named error") {
+    // three rows at x = 2000: each q6 product (4e18) fits, their sum (1.2e19) does not
+    assertEnvelopeError(Seq((1L, Array(2000.0, 1.0)), (2L, Array(2000.0, 2.0)),
+      (3L, Array(2000.0, -1.0))).toDF("vec_id", "embedding"))
+  }
+
+  test("pcaWhiten: a per-row product past 2^63 under ANSI is the named error") {
+    // x = 5000: q6 = 5e9, and q6² = 2.5e19 does not fit a BIGINT
+    assertEnvelopeError(Seq((1L, Array(5000.0, 1.0)), (2L, Array(1.0, 2.0)))
+      .toDF("vec_id", "embedding"))
+  }
+
   test("qualityTiers: thirds split, tiered keep rates, approx cuts agree with exact") {
     val exact = TextAnalysis.qualityTiers(docs, "text", "doc_id", topV = 20)
       .collect().map(r => r.getLong(0) -> ((r.getString(2), r.getBoolean(3)))).toMap

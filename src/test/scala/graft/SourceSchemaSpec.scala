@@ -4,14 +4,17 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.Try
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import graft.infer.DatetimeFormatInfer
 
-/** The source-schema memo behind `Tables.parquet` and `Tables.csv`: a
-  * remembered schema reads exactly what Spark's inferring read does, and
-  * the second read of an unchanged source runs no Spark job. */
+/** The two memos behind `Tables.t`, `Tables.parquet` and `Tables.csv`.
+  * The source-schema memo: a remembered schema reads exactly what Spark's
+  * inferring read does, and the second read of an unchanged source runs
+  * no Spark job. The frame memo: that second read is the first read's
+  * very frame, until the source, the session or one of its confs changes. */
 class SourceSchemaSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -182,10 +185,132 @@ class SourceSchemaSpec extends SparkTestBase {
     paths.foreach { p =>
       Tables.csv(spark, p, ",", inferSchema = false)
       assert(Tables.memoSize <= Tables.MemoCap)
+      assert(Tables.frameMemoSize(spark) <= Tables.MemoCap)
     }
     assert(Tables.memoSize == Tables.MemoCap)
+    assert(Tables.frameMemoSize(spark) == Tables.MemoCap)
     assert(jobsOf("memo-cap-last")(Tables.csv(spark, paths.last, ",", inferSchema = false))._1 == 0)
     assert(jobsOf("memo-cap-first")(Tables.csv(spark, paths.head, ",", inferSchema = false))._1 >= 1,
       "the least recently used schema must have been evicted")
+  }
+
+  // ---- the frame memo ----------------------------------------------------
+
+  /** The compiled-class count: Spark's codegen metric, one count per
+    * generated class compiled in this JVM. */
+  private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a frame memo hit is the same frame, with no job") {
+    val dir = tmp("graft-frame-hit")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "x").write.parquet(s"$dir/t1.parquet")
+    Files.writeString(Paths.get(dir, "c.csv"), "id|x\n1|a\n2|b\n")
+    val reads: Seq[(String, () => DataFrame)] = Seq(
+      "t" -> (() => Tables.t(spark, dir, "t1")),
+      "parquet" -> (() => Tables.parquet(spark, s"$dir/t1.parquet")),
+      "csv" -> (() => Tables.csv(spark, s"$dir/c.csv", "|")),
+      "events" -> (() => Tables.events(spark, SF)))
+    for ((tag, read) <- reads) {
+      val first = read()
+      val hit = secondRead(s"frame-hit-$tag")(read())
+      assert(hit eq first, s"$tag: a hit must return the first read's frame")
+    }
+    // t's frame is the normalized one, not the raw parquet frame
+    assert(!(Tables.t(spark, dir, "t1") eq Tables.parquet(spark, s"$dir/t1.parquet")))
+  }
+
+  test("a rewritten source gets a new frame with the new rows") {
+    val path = tmp("graft-frame-rw") + "/t"
+    Seq(1L, 2L).toDF("id").write.parquet(path)
+    val first = Tables.parquet(spark, path)
+    assert(rowsOf(first) == Seq("[1]", "[2]"))
+    Seq(7L, 8L, 9L).toDF("id").write.mode("overwrite").parquet(path)
+    val second = Tables.parquet(spark, path)
+    assert(!(second eq first))
+    assert(rowsOf(second) == Seq("[7]", "[8]", "[9]"))
+    assert(Tables.parquet(spark, path) eq second)
+  }
+
+  test("a changed session time zone misses and reads that zone's rows") {
+    // normalizeSchema casts a DATE to a timestamp: the cast's zone is
+    // fixed into the analyzed plan, so a frame built under UTC is wrong
+    // under any other zone
+    val dir = tmp("graft-frame-tz")
+    Seq((1L, "2024-01-02")).toDF("o_orderkey", "d")
+      .select(col("o_orderkey"), to_date(col("d")).as("o_orderdate"))
+      .write.parquet(s"$dir/orders.parquet")
+    def micros(df: DataFrame): Long = df.select(unix_micros(col("o_orderdate"))).as[Long].head()
+    val key = "spark.sql.session.timeZone"
+    val utc = Tables.orders(spark, dir)
+    assert(micros(utc) == 1704153600000000L)
+    try {
+      spark.conf.set(key, "Asia/Tokyo")
+      val tokyo = Tables.orders(spark, dir)
+      assert(micros(tokyo) == 1704153600000000L - 9L * 3600 * 1000000)
+      assert(!(tokyo eq utc), "a changed time zone must miss")
+      assert(micros(tokyo) == micros(Tables.normalizeSchema(spark.read.parquet(s"$dir/orders.parquet"))))
+      assert(Tables.orders(spark, dir) eq tokyo)
+    } finally spark.conf.set(key, "UTC")
+    assert(Tables.orders(spark, dir) eq utc)
+  }
+
+  test("a second session gets its own frame") {
+    val other = spark.newSession()
+    val mine = Tables.events(spark, SF)
+    val theirs = Tables.events(other, SF)
+    assert(!(theirs eq mine))
+    assert(theirs.sparkSession eq other)
+    assert(Tables.events(other, SF) eq theirs)
+    assert(Tables.events(spark, SF) eq mine)
+    assert(rowsOf(theirs) == rowsOf(mine))
+  }
+
+  test("a second classifyTable of a table compiles no class") {
+    graft.infer.ColumnClassifier.classifyTable(Tables.customer(spark, SF)).collect()
+    val before = compiled
+    graft.infer.ColumnClassifier.classifyTable(Tables.customer(spark, SF)).collect()
+    assert(compiled - before == 0, s"the second classifyTable compiled ${compiled - before} classes")
+  }
+
+  test("a join of two loads of one table gives the rows of two separate reads") {
+    // two loads are one frame, so these are self-joins: an equality of
+    // Dataset-bound refs still resolves to both sides, and a Dataset-bound
+    // ref that cannot tell the sides apart fails loudly, never silently
+    val raw = () => Tables.normalizeSchema(spark.read.parquet(s"$SF/events.parquet"))
+    def joins(a: DataFrame, b: DataFrame): Seq[Seq[String]] = {
+      val small = a.filter(col("value") > 50).select("event_id", "user_id", "ts")
+      val perUser = b.groupBy("user_id").agg(max("ts").as("last"), count(lit(1)).as("n"))
+      Seq(
+        rowsOf(a.join(b, a("event_id") === b("event_id"))),
+        rowsOf(small.join(perUser, small("user_id") === perUser("user_id"))),
+        rowsOf(small.join(perUser, Seq("user_id"))),
+        rowsOf(a.as("l").join(b.as("r"), col("l.ts") < col("r.ts") && col("l.user_id") === col("r.user_id"))
+          .select(col("l.event_id"), col("r.event_id"))))
+    }
+    val (a, b) = (Tables.events(spark, SF), Tables.events(spark, SF))
+    val got = joins(a, b)
+    assert(got == joins(raw(), raw()))
+    assert(got.forall(_.nonEmpty))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      a.join(b, a("event_id") === b("event_id")).select(b("value")).collect()
+    }
+    assert(e.getMessage.contains("ambiguous"), e.getMessage)
+  }
+
+  test("the listing digest is the one a listFiles walk gives") {
+    import java.security.MessageDigest
+    import org.apache.hadoop.fs.Path
+    val dir = tmp("graft-frame-digest")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "k").write.partitionBy("k").parquet(s"$dir/p")
+    for (path <- Seq(s"$dir/p", s"$SF/events.parquet")) {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}").toVector.sorted
+      val sha = MessageDigest.getInstance("SHA-256")
+      files.foreach(f => sha.update((f + "\n").getBytes("UTF-8")))
+      assert(Tables.listing(spark, path).contains(
+        s"${fs.makeQualified(p)}\u0000${sha.digest().map("%02x".format(_)).mkString}"), path)
+    }
   }
 }
